@@ -79,12 +79,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--reset-state", nargs="?", const="", metavar="YYYYMMDD")
     p.add_argument("--stop", metavar="YYYYMMDD")
     p.add_argument("--force", action="store_true")
-    p.add_argument(
-        "--batch",
-        action="store_true",
-        help="write all pending days in one partitioned job (scale path) "
-        "instead of the per-day watermark loop",
-    )
     args = p.parse_args(argv)
 
     try:
@@ -102,7 +96,7 @@ def main(argv: list[str] | None = None) -> int:
         print(f"invalid --stop: {e}", file=sys.stderr)
         return 1
     spark = get_spark("aristoteles_spark_cli")
-    result = run(spark, conf, stop=stop, force=args.force, batch=args.batch)
+    result = run(spark, conf, stop=stop, force=args.force)
     if result.incomplete_stations:
         print(
             f"gate: incomplete stations {result.incomplete_stations}; deferring",

@@ -1,36 +1,43 @@
 """End-to-end incremental weather pipeline (the reference's entry()).
 
-Orchestration mirrors reference aristoteles/aristoteles.py:148-485 but the
-per-day transform collapses into one declarative Spark plan:
+Orchestration mirrors reference aristoteles/aristoteles.py:148-485. A run
+reads the watermark, gates on the target day's completeness, then:
 
-    read_stations (range pushed to SQLite)
-      -> conversion_exprs (Catalyst when/otherwise, codegen'd)
-      -> write_day (partitioned parquet, sorted within partition)
+    read_stations over the whole pending span (range pushed to SQLite)
+      -> convert_dataframe (Catalyst when/otherwise, codegen'd)
+      -> ONE write of every pending day into a hidden staging directory,
+         partitioned by date (one file per day, NaN for NULL)
+      -> publish on the driver, day by day in order: lock, swap the
+         staged partition in (sinks/compact.swap_partition), sidecar,
+         unlock, advance the watermark
 
 Deliberately batch-incremental, NOT Structured Streaming: emission is
 completeness-*triggered* (hold a day until every station has 288 samples),
-which event-time watermarks cannot express (SURVEY.md §2.9). The state file
-advances after each day's commit, so re-runs are idempotent per day.
-
-Scale note: the reference loops day x station serially; here all pending
-days per batch could be written in ONE job partitioned by (acq, date) — the
-day loop below is kept to preserve the reference's crash-safe per-day
-watermark advance, but batch_write_days() offers the single-job path.
+which event-time watermarks cannot express (SURVEY.md §2.9). The watermark
+advances after each day's publish, as in the reference (aristoteles.py:476),
+so a crash anywhere leaves it at a committed or skipped day; a re-run
+repairs an interrupted swap (``recover_compaction``) and redoes the days
+from the watermark on.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import os
+import shutil
+from collections import Counter
 from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
+from pyspark.sql import functions as F
 
 from aristoteles_spark.functions.units import convert_dataframe
 from aristoteles_spark.obs.prom import PromBuffer
 from aristoteles_spark.plans import days as D
 from aristoteles_spark.plans import state as S
 from aristoteles_spark.schema import SAMPLES_PER_DAY
-from aristoteles_spark.sinks.daily_parquet import write_day
+from aristoteles_spark.sinks.compact import recover_compaction, staging_dir, swap_partition
+from aristoteles_spark.sinks.daily_parquet import lock_path, write_sidecar
 from aristoteles_spark.sources.sqlite_source import (
     min_datetime,
     ranged_count,
@@ -67,18 +74,12 @@ def run(
     stop: dt.date | None = None,
     force: bool = False,
     today: dt.date | None = None,
-    batch: bool = False,
 ) -> RunResult:
-    """One incremental run: catch up every unwritten complete day.
-
-    ``batch=True`` takes the scale path: the same state read, target
-    selection, and completeness gate, but every pending day lands in ONE
-    partitioned write (batch_write_days) instead of the reference's
-    crash-safe day-at-a-time loop — the trade a 100 TB catch-up makes
-    (state advances once, after the whole span commits)."""
+    """One incremental run: catch up every unwritten complete day."""
     prom = PromBuffer()
     result = RunResult(status=0)
     try:
+        recover_compaction(conf.archive)  # leftovers of an interrupted run
         db_paths = {n: sc["db_path"] for n, sc in conf.stations.items()}
 
         # earliest data across stations (reference SQL #1 + driver fold,
@@ -109,37 +110,23 @@ def run(
             result.incomplete_stations = incomplete
             return result  # status 0: defer the whole backlog
 
-        if batch:
-            result.rows_written, result.days_written = batch_write_days(
-                spark, conf, first_day, target
-            )
+        staging = staging_dir(conf.archive)
+        try:
+            rows = _stage_days(spark, conf, db_paths, first_day, target, staging)
+            for day in D.span_range(first_day, target):
+                published = _publish_day(conf, staging, day)
+                # crash-safe: advance the watermark only after the day's commit
+                S.write_state(conf.state_path, day)
+                # a day counts for the run that advanced the watermark past it
+                if published:
+                    result.days_written += 1
+                    result.rows_written += rows[day]
+                else:  # skip-day path (reference aristoteles.py:348-370)
+                    result.skipped_days.append(day)
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
             prom.add("days_written", result.days_written)
             prom.add("rows_written", result.rows_written)
-            return result
-
-        for day in D.span_range(first_day, target):
-            lo, hi = D.day_bounds(day)
-            df = read_stations(spark, db_paths, lo, hi)
-            if df.isEmpty():  # skip-day path (reference aristoteles.py:348-370)
-                result.skipped_days.append(day)
-                S.write_state(conf.state_path, day)
-                continue
-            converted = convert_dataframe(df, strict=conf.strict_units)
-            rows = write_day(
-                converted,
-                conf.archive,
-                conf.instrument,
-                day,
-                conf.stations,
-                fmt=conf.output_format,
-            )
-            result.rows_written += rows
-            result.days_written += 1
-            # crash-safe: advance watermark only after the day's commit
-            S.write_state(conf.state_path, day)
-
-        prom.add("days_written", result.days_written)
-        prom.add("rows_written", result.rows_written)
         return result
     except Exception:
         result.status = 1
@@ -148,89 +135,54 @@ def run(
         prom.flush(conf.netfc_path, result.status)
 
 
-def batch_write_days(
+def _stage_days(
     spark: SparkSession,
     conf: PipelineConfig,
+    db_paths: dict[str, str],
     first: dt.date,
     last: dt.date,
-) -> tuple[int, int]:
-    """Scale path: ALL pending days in one partitioned write (single job).
-
-    The read goes through the ``format("wview")`` Python Data Source
-    (sources/wview_datasource.py): per-(station, day) input partitions,
-    dateTime range pushed down into SQLite, Arrow batches decoded on
-    EXECUTORS — the only ingest whose parallelism scales with the
-    cluster. (The per-day incremental loop keeps the driver-side Arrow
-    read: one day x one station is a few hundred rows, where a
-    distributed scan is pure overhead.) Conversion, then a single write
-    partitioned by (acq, date) — Spark writes every day in parallel
-    instead of the reference's serial day loop. Trades per-day watermark
-    granularity for throughput; state advances once at the end.
-
-    Returns ``(rows_written, days_written)`` counted from THIS job's
-    output frame via the Observation API (metrics ride the write job —
-    no second ingest pass) — not from a readback of the whole
-    [first, last] span, which would also count rows that pre-existed in
-    the archive (a forced re-run, or a day whose source went empty so
-    dynamic overwrite left the old partition) and overstate the run's
-    metrics relative to the per-day loop.
-    """
-    import pyspark.sql.functions as F
-
-    from aristoteles_spark.plans.days import acq_name
-    from aristoteles_spark.sinks.daily_parquet import _write_sidecar
-
-    from aristoteles_spark.sources.wview_datasource import register
-
-    db_paths = {n: sc["db_path"] for n, sc in conf.stations.items()}
+    staging: str,
+) -> dict[dt.date, int]:
+    """Write every day of ``[first, last]`` in ONE job to ``staging``,
+    partitioned by ``date`` with one file per day; a day without rows
+    gets no partition. Returns rows per day, counted by an Observation
+    on the write job itself (no second pass over the data)."""
     lo, _ = D.day_bounds(first)
     _, hi = D.day_bounds(last)
-    register(spark)
-    df = (
-        spark.read.format("wview")
-        .option("stations", ";".join(f"{n}={p}" for n, p in db_paths.items()))
-        .load()
-        # range filter pushed down into each per-(station, day) SQLite
-        # read (WviewReader.pushFilters); also prunes day partitions
-        .filter((F.col("dateTime") >= lo) & (F.col("dateTime") <= hi))
+    df = convert_dataframe(read_stations(spark, db_paths, lo, hi), strict=conf.strict_units)
+    # the reference's NULL -> NaN (np.asarray(..., dtype=float), aristoteles.py:346)
+    nan = F.lit(float("nan"))
+    df = df.select(
+        *[F.coalesce(c, nan).alias(c) if t == "double" else c for c, t in df.dtypes]
     )
-    converted = convert_dataframe(df, strict=conf.strict_units)
-    ts = F.to_timestamp(F.col("dateTime"))
+    # UTC day by integer arithmetic: independent of the session time zone
     out = (
-        converted.withColumn("date", F.to_date(ts))
-        .withColumn(
-            "acq",
-            F.concat(
-                F.date_format(F.date_trunc("MONTH", ts), "yyyyMMdd"),
-                F.lit(f"T000000Z_{conf.instrument}_weather"),
-            ),
-        )
-        .repartition("acq", "date")
-        .sortWithinPartitions("station", "dateTime")
+        df.withColumn("date", F.date_from_unix_date(F.floor(F.col("dateTime") / 86400).cast("int")))
+        .repartition("date")
+        .sortWithinPartitions("date", "station", "dateTime")
     )
-    # metrics ride the WRITE job via the Observation API — the source is
-    # scanned exactly once (an after-the-fact agg on `out` would re-run
-    # the whole ingest; a span readback would double-count pre-existing
-    # partitions the dynamic overwrite didn't touch). An all-empty span
-    # writes nothing (dynamic overwrite touches no partitions) and the
-    # watermark still advances, matching the loop path's skip behavior.
-    from pyspark.sql import Observation
+    # one day offset per row: linear in rows, where one count per day
+    # would evaluate every day's predicate on every row
+    obs = Observation("staged_rows")
+    observed = out.observe(obs, F.collect_list(F.datediff("date", F.lit(first))).alias("day"))
+    observed.write.partitionBy("date").format(conf.output_format).save(staging)
+    per_day = Counter(obs.get["day"])
+    return {d: per_day[i] for i, d in enumerate(D.span_range(first, last))}
 
-    obs = Observation("batch_write_metrics")
-    observed = out.observe(
-        obs,
-        F.count(F.lit(1)).alias("rows"),
-        F.size(F.collect_set("date")).alias("days"),
-    )
-    (
-        observed.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("acq", "date")
-        .parquet(conf.archive)
-    )
-    rows, days = int(obs.get["rows"]), int(obs.get["days"])
-    if rows > 0:
-        for day in {D.month_floor(d) for d in D.span_range(first, last)}:
-            _write_sidecar(conf.archive, acq_name(day, conf.instrument), conf.instrument, conf.stations)
-    S.write_state(conf.state_path, last)
-    return rows, days
+
+def _publish_day(conf: PipelineConfig, staging: str, day: dt.date) -> bool:
+    """Swap one staged day into the archive under the reference's lock
+    protocol, then refresh its acquisition's sidecar. False when the day
+    has no staged partition (no rows: a skip day)."""
+    staged = os.path.join(staging, f"date={day.isoformat()}")
+    if not os.path.isdir(staged):
+        return False
+    acq = D.acq_name(day, conf.instrument)
+    acq_dir = os.path.join(conf.archive, f"acq={acq}")
+    os.makedirs(acq_dir, exist_ok=True)
+    lock = lock_path(conf.archive, acq, day)
+    open(lock, "w").close()
+    swap_partition(staged, os.path.join(acq_dir, f"date={day.isoformat()}"))
+    write_sidecar(conf.archive, acq, conf.instrument, conf.stations)
+    os.unlink(lock)
+    return True

@@ -29,7 +29,9 @@ def q_min_probe(spark, sf_dir):
 def q_projection(spark, sf_dir):
     return (
         _t(spark, sf_dir, "lineitem")
-        .orderBy("l_orderkey", "l_linenumber")
+        # (l_orderkey, l_linenumber) is not unique in the synthetic data:
+        # the projected columns break its ties, so tied rows are identical
+        .orderBy("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
         .select("l_orderkey", "l_quantity", "l_extendedprice")
         .limit(100)
     )
@@ -552,7 +554,7 @@ ORACLE = {
     "s2_min_probe": "SELECT min(l_orderkey) AS min_orderkey FROM lineitem",
     "p1_projection": (
         "SELECT l_orderkey, l_quantity, l_extendedprice FROM lineitem "
-        "ORDER BY l_orderkey, l_linenumber LIMIT 100"
+        "ORDER BY l_orderkey, l_linenumber, l_quantity, l_extendedprice LIMIT 100"
     ),
     "p2_range_count": "SELECT count(*) AS cnt FROM orders WHERE o_orderkey BETWEEN 1000 AND 2000",
     "a1_count_between": "SELECT count(*) AS cnt FROM lineitem WHERE l_quantity BETWEEN 10 AND 20",

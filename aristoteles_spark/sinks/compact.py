@@ -16,8 +16,10 @@ never touched. For a selected partition the swap is two renames
 leaves either the old or the new directory on disk; the backup name is
 dot-prefixed so Spark's listing never reads it as a partition, and
 ``recover_compaction`` repairs both crash windows idempotently
-(restore an orphaned backup / drop a stale one). (An earlier in-place
-design held the only copy of the
+(restore an orphaned backup / drop a stale one). The ETL pipeline
+(plans/pipeline.py) publishes its staged days through the same
+``staging_dir`` / ``swap_partition`` / ``recover_compaction`` protocol.
+(An earlier in-place design held the only copy of the
 rewritten rows in executor block storage while dynamic overwrite deleted
 the originals; an executor loss mid-commit could drop a partition for
 good.) On object stores without atomic rename, point ``path`` at a
@@ -44,8 +46,36 @@ def _bak_path(dest: str) -> str:
     return os.path.join(parent, f".{leaf}.compact-bak")
 
 
+def staging_dir(path: str) -> str:
+    """A fresh hidden sibling of the table at ``path`` to stage a write
+    in: on the same filesystem, so publishing a staged partition is a
+    rename, not a copy; dot-prefixed, so no listing of the parent reads
+    it; named so that ``recover_compaction`` removes it if a crash
+    leaves it behind."""
+    parent, base = os.path.split(os.path.abspath(path.rstrip("/")))
+    return os.path.join(parent, f".{base}.compact-{uuid.uuid4().hex[:8]}")
+
+
+def swap_partition(src: str, dest: str) -> None:
+    """Publish the staged partition directory ``src`` as ``dest``: two
+    renames (current -> hidden backup, staged -> current), then drop the
+    backup. A crash leaves the old directory, the new one, or a backup
+    that ``recover_compaction`` restores."""
+    bak = _bak_path(dest)
+    os.makedirs(os.path.dirname(dest), exist_ok=True)
+    if os.path.exists(bak):
+        shutil.rmtree(bak)
+    had_old = os.path.exists(dest)
+    if had_old:
+        os.rename(dest, bak)
+    os.rename(src, dest)
+    if had_old:
+        shutil.rmtree(bak)
+
+
 def recover_compaction(path: str) -> dict[str, list[str]]:
-    """Repair the two crash windows a killed compaction can leave.
+    """Repair the two crash windows a killed compaction or pipeline
+    publish can leave.
 
     - Backup present AND destination present: the swap completed but
       cleanup didn't — delete the stale backup.
@@ -70,7 +100,7 @@ def recover_compaction(path: str) -> dict[str, list[str]]:
                     restored.append(os.path.relpath(dest, path))
                 dirs.remove(d)
     parent, base = os.path.split(os.path.abspath(path.rstrip("/")))
-    for d in os.listdir(parent):
+    for d in os.listdir(parent) if os.path.isdir(parent) else []:
         if d.startswith(f".{base}.compact-"):
             shutil.rmtree(os.path.join(parent, d), ignore_errors=True)
             cleaned.append(d)
@@ -135,11 +165,7 @@ def compact_partitions(
     if cluster_cols:
         out = out.sortWithinPartitions(*cluster_cols)
 
-    # stage the compacted copy beside the table (same filesystem, so the
-    # later per-partition swaps are renames, not copies); a leading dot
-    # keeps any sibling-level listing from picking it up
-    parent, base = os.path.split(os.path.abspath(path.rstrip("/")))
-    staging = os.path.join(parent, f".{base}.compact-{uuid.uuid4().hex[:8]}")
+    staging = staging_dir(path)
     try:
         (
             out.write.mode("overwrite")
@@ -147,20 +173,8 @@ def compact_partitions(
             .partitionBy(*partition_cols)
             .parquet(staging)
         )
-        rewritten = _leaf_partition_dirs(staging)
-        for rel in rewritten:
-            src = os.path.join(staging, rel)
-            dest = os.path.join(path, rel)
-            bak = _bak_path(dest)
-            os.makedirs(os.path.dirname(dest), exist_ok=True)
-            if os.path.exists(bak):
-                shutil.rmtree(bak)
-            had_old = os.path.exists(dest)
-            if had_old:
-                os.rename(dest, bak)
-            os.rename(src, dest)
-            if had_old:
-                shutil.rmtree(bak)
+        for rel in _leaf_partition_dirs(staging):
+            swap_partition(os.path.join(staging, rel), os.path.join(path, rel))
     finally:
         shutil.rmtree(staging, ignore_errors=True)
 

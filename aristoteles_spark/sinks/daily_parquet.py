@@ -11,13 +11,14 @@ columnar Parquet:
   index_map/station_time_<s> time axis        dateTime column (per station rows)
   per-station group + attrs                   station column + sidecar attrs
   per-measure 1-D float64 dataset + units     measure columns + units in sidecar
-  .{file}.lock in-progress marker             .<date>.lock emitted around write
-  whole-file overwrite idempotence            dynamic partition overwrite
+  .{file}.lock in-progress marker             .<date>.lock held around the swap
+  whole-file overwrite idempotence            staged partition swapped in whole
 
-At scale this is the right shape: date-partitioned parquet gives partition
-pruning for time-range queries, and ``sortWithinPartitions(station,
-dateTime)`` keeps each file time-ordered (the reference's ORDER BY,
-aristoteles.py:343) without a global sort/shuffle.
+The pipeline (plans/pipeline.py) writes the day partitions and swaps
+them in; this module holds the layout's metadata: attrs, sidecar, lock.
+Date-partitioned parquet gives partition pruning for time-range queries,
+and each day's file is sorted by (station, dateTime) (the reference's
+ORDER BY, aristoteles.py:343).
 """
 
 from __future__ import annotations
@@ -28,11 +29,7 @@ import json
 import os
 import socket
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
 from aristoteles_spark import __version__
-from aristoteles_spark.plans.days import acq_name
 from aristoteles_spark.schema import ARCHIVE_VERSION, MEASURE_TYPES, UNITS
 
 
@@ -74,59 +71,7 @@ def lock_path(archive_dir: str, acq: str, day: dt.date) -> str:
     return os.path.join(archive_dir, f"acq={acq}", f".{day.strftime('%Y%m%d')}.lock")
 
 
-def write_day(
-    df: DataFrame,
-    archive_dir: str,
-    instrument: str,
-    day: dt.date,
-    stations_conf: dict[str, dict] | None = None,
-    nan_for_null: bool = True,
-    fmt: str = "parquet",
-) -> int:
-    """Write one UTC day's converted rows; returns rows written.
-
-    ``nan_for_null`` reproduces the reference's NULL->NaN policy
-    (np.asarray(..., dtype=float) turns None into NaN, aristoteles.py:346).
-    ``fmt`` selects the columnar format: parquet (default) or orc — both
-    support the same partitioned layout, pushdown, and dynamic overwrite.
-    Idempotent: partition directory is fully overwritten, mirroring the
-    reference's whole-file overwrite (h5py.File(..., 'w'), aristoteles.py:393).
-    """
-    acq = acq_name(day, instrument)
-    if nan_for_null:
-        nan = F.lit(float("nan"))
-        df = df.select(
-            *[
-                F.coalesce(F.col(c), nan).alias(c) if t == "double" else F.col(c)
-                for c, t in df.dtypes
-            ]
-        )
-    out = (
-        df.withColumn("acq", F.lit(acq))
-        .withColumn("date", F.lit(day.isoformat()).cast("date"))
-        .repartition(1)  # <=288 rows x stations: one file per day, like the reference
-        .sortWithinPartitions("station", "dateTime")
-    )
-
-    os.makedirs(os.path.join(archive_dir, f"acq={acq}"), exist_ok=True)
-    lock = lock_path(archive_dir, acq, day)
-    open(lock, "w").close()
-    try:
-        (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("acq", "date")
-            .format(fmt)
-            .save(archive_dir)
-        )
-        _write_sidecar(archive_dir, acq, instrument, stations_conf or {})
-    finally:
-        if os.path.exists(lock):
-            os.unlink(lock)
-    return df.count()
-
-
-def _write_sidecar(archive_dir: str, acq: str, instrument: str, stations_conf: dict) -> None:
+def write_sidecar(archive_dir: str, acq: str, instrument: str, stations_conf: dict) -> None:
     """Atomic attrs sidecar per acquisition dir (.new + rename, the
     reference's atomic-visibility idiom, aristoteles.py:111,142)."""
     path = os.path.join(archive_dir, f"acq={acq}", "_attrs.json")

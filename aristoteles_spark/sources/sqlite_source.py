@@ -8,14 +8,15 @@ statements (reference: aristoteles/aristoteles.py:229-241,303-306,339-346):
   #3  SELECT <18 cols> FROM archive WHERE dateTime BETWEEN ? AND ?
       ORDER BY dateTime                                         (extract)
 
-Design decision (SURVEY.md §4): default ingestion for the incremental
-CLI pipeline is driver-side ``sqlite3`` -> Arrow -> ``createDataFrame``.
-Station archives are tiny per day (288 rows); SQLite's own index on
-``dateTime`` already gives us pushdown for the scalar probes. The SCALE
-path — bulk backfills over many stations/years — is the ``wview``
-Python Data Source (``sources/wview_datasource.py``): day-partitioned
-parallel executor-side reads with dateTime/station filter pushdown, no
-JVM driver dependency.
+Design decision (SURVEY.md §4): the pipeline (plans/pipeline.py) ingests
+through this module's driver-side ``sqlite3`` -> Arrow -> ``createDataFrame``
+reader, one ranged read per station for the whole pending span. A station
+produces 288 rows a day, so a 180-day backfill of three stations is
+155,520 rows, well within one driver read; SQLite's own index on
+``dateTime`` gives pushdown for the scalar probes and the range. The
+``wview`` Python Data Source (``sources/wview_datasource.py``) is the
+library's executor-parallel reader for reads too large for the driver;
+the pipeline does not use it.
 
 Pushdown policy: the scalar probes (#1, #2) are answered by SQLite directly
 — shipping whole tables to Spark to compute a MIN or COUNT would invert the

@@ -9,8 +9,9 @@ V2 source with
   reads only its ``BETWEEN`` slice off the indexed ``dateTime`` PK, so a
   year of archives across hundreds of stations scans as hundreds of
   independent tasks, no driver bottleneck (unlike the driver-side Arrow
-  reader in sqlite_source.py, which remains the right tool for the tiny
-  single-day incremental reads the CLI pipeline does);
+  reader in sqlite_source.py, which the CLI pipeline uses: its pending
+  spans are small enough for one driver read, and a Python-worker task
+  per station-day slice costs more than it saves there);
 - **filter pushdown** — dateTime range and station equality/IN predicates
   narrow the partition list at planning time AND the SQL sent to SQLite,
   so ``.where("dateTime BETWEEN a AND b")`` prunes both tasks and rows;
@@ -450,6 +451,3 @@ class WviewDataSource(DataSource):
             )
         return WviewWriter(self.options, overwrite)
 
-
-def register(spark) -> None:
-    spark.dataSource.register(WviewDataSource)

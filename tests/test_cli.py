@@ -75,31 +75,3 @@ class TestCli:
         assert main(["-c", conf_path, "--reset-state", "20150101", "--force"]) == 0
         assert (tmp_path / "state").read_text().strip() == "20200601"
 
-
-class TestBatchFlag:
-    def test_batch_run_writes_same_data_as_loop(self, tmp_path):
-        import glob
-
-        db = tmp_path / "st.sqlite"
-        write_archive_sqlite(
-            str(db), _day_rows(DAY1) + _day_rows(DAY1 + dt.timedelta(days=1))
-        )
-        out = {}
-        for mode, extra in (("loop", []), ("batch", ["--batch"])):
-            conf = tmp_path / f"conf_{mode}.ini"
-            conf.write_text(
-                f"[DEFAULT]\nstate_path = {tmp_path}/state_{mode}\n"
-                f"instrument = wx\narchive = {tmp_path}/archive_{mode}\n\n"
-                f"[st]\ndb_path = {db}\n"
-            )
-            assert main(["-c", str(conf), "--stop", "20200602", *extra]) == 0
-            assert (tmp_path / f"state_{mode}").read_text().strip() == "20200603"
-            import duckdb
-
-            files = sorted(
-                glob.glob(f"{tmp_path}/archive_{mode}/acq=*/date=*/*.parquet")
-            )
-            out[mode] = duckdb.sql(
-                f"SELECT * FROM read_parquet({files!r}) ORDER BY station, dateTime"
-            ).fetchall()
-        assert out["batch"] == out["loop"] and len(out["loop"]) == 576

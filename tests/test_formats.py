@@ -46,25 +46,23 @@ class TestFileSources:
 
 
 class TestOrcSink:
-    def test_write_day_orc(self, spark):
-        from aristoteles_spark.schema import ARCHIVE_SCHEMA, MEASURES
-        from aristoteles_spark.sinks.daily_parquet import write_day
+    def test_write_day_orc(self, spark, tmp_path, station_db):
+        from aristoteles_spark.plans.pipeline import PipelineConfig, run
+        from tests.conftest import day_rows
 
         day = dt.date(2020, 6, 1)
-        t0 = int(dt.datetime(2020, 6, 1, tzinfo=dt.timezone.utc).timestamp())
-        rows = [
-            (t0 + i * 300, 0, *[float(i + j) for j in range(len(MEASURES))])
-            for i in range(4)
-        ]
-        df = spark.createDataFrame(rows, schema=ARCHIVE_SCHEMA).withColumn(
-            "station", F.lit("st")
+        conf = PipelineConfig(
+            state_path=str(tmp_path / "state"),
+            instrument="wx",
+            archive=str(tmp_path / "archive"),
+            stations={"st": {"db_path": station_db("st", day_rows(day, n=4))}},
+            output_format="orc",
         )
-        tmp = tempfile.mkdtemp(prefix="orc_archive_")
-        n = write_day(df, tmp, "wx", day, {"st": {"db_path": "x"}}, fmt="orc")
-        assert n == 4
-        files = glob.glob(f"{tmp}/acq=*/date=*/*.orc")
-        assert files, os.listdir(tmp)
-        back = spark.read.orc(tmp)
+        res = run(spark, conf, stop=day, force=True)
+        assert res.days_written == 1 and res.rows_written == 4
+        files = glob.glob(f"{conf.archive}/acq=*/date=*/*.orc")
+        assert files, os.listdir(conf.archive)
+        back = spark.read.orc(conf.archive)
         assert back.count() == 4
         assert back.filter(F.col("outTemp").isNotNull()).count() == 4
 

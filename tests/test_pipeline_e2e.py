@@ -4,6 +4,7 @@ Each scenario builds synthetic wview SQLite fixtures, runs the incremental
 pipeline, and checks output parquet + sidecars + state + idempotence.
 """
 
+import dataclasses
 import datetime as dt
 import json
 import math
@@ -13,12 +14,13 @@ import pytest
 
 from aristoteles_spark.plans import state as S
 from aristoteles_spark.plans.days import day_bounds
-from aristoteles_spark.plans.pipeline import PipelineConfig, batch_write_days, run
+from aristoteles_spark.plans.pipeline import PipelineConfig, run
 from tests.conftest import day_rows
 
 DAY1 = dt.date(2020, 6, 1)
 DAY2 = dt.date(2020, 6, 2)
 DAY3 = dt.date(2020, 6, 3)
+DAY4 = dt.date(2020, 6, 4)
 
 
 def make_conf(tmp_path, station_db, station_rows, **kw):
@@ -113,12 +115,16 @@ def test_idempotent_rerun(spark, tmp_path, station_db):
 
 
 def test_null_to_nan_and_zero_quirk(spark, tmp_path, station_db):
-    rows = day_rows(DAY1, nulls_at={"dewpoint": [0]}, zeros_at={"outTemp": [1]})
+    # two days, so the span is staged by one multi-day write
+    rows = day_rows(DAY1, nulls_at={"dewpoint": [0]}, zeros_at={"outTemp": [1]}) + day_rows(
+        DAY2, nulls_at={"dewpoint": [0]}, zeros_at={"outTemp": [1]}
+    )
     conf = make_conf(tmp_path, station_db, {"s1": rows})
-    run(spark, conf, today=DAY2)
+    assert run(spark, conf, today=DAY3).days_written == 2
     out = read_output(spark, conf).orderBy("dateTime").collect()
-    assert math.isnan(out[0]["dewpoint"])  # NULL -> NaN at the sink
-    assert out[1]["outTemp"] == 0.0  # 0 degF stays 0 (strict quirk)
+    for i in (0, 288):
+        assert math.isnan(out[i]["dewpoint"])  # NULL -> NaN at the sink
+        assert out[i + 1]["outTemp"] == 0.0  # 0 degF stays 0 (strict quirk)
 
 
 def test_mixed_units_per_row(spark, tmp_path, station_db):
@@ -156,30 +162,118 @@ def test_output_time_sorted_within_day(spark, tmp_path, station_db):
     assert times == sorted(times)
 
 
-def test_batch_write_days_matches_loop(spark, tmp_path, station_db):
-    rows = day_rows(DAY1) + day_rows(DAY2)
-    conf_a = make_conf(tmp_path, station_db, {"sA": rows})
-    run(spark, conf_a, today=DAY3)
-    loop_out = spark.read.parquet(conf_a.archive)
+def test_one_day_run_starts_only_its_write_jobs(spark, tmp_path, station_db):
+    conf = make_conf(tmp_path, station_db, {"s1": day_rows(DAY1)})
+    sc = spark.sparkContext
+    sc.setJobGroup("one_day_run", "one_day_run")
+    try:
+        assert run(spark, conf, today=DAY2).rows_written == 288
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the staging write: its shuffle map stage (run as its own job under
+    # AQE) and the write stage; no isEmpty or count job
+    assert len(sc.statusTracker().getJobIdsForGroup("one_day_run")) <= 2
 
-    conf_b = PipelineConfig(
-        state_path=str(tmp_path / "state_b"),
-        instrument="testinst",
-        archive=str(tmp_path / "archive_b"),
-        stations={"sA": conf_a.stations["sA"]},
-    )
-    n, days = batch_write_days(spark, conf_b, DAY1, DAY2)
-    batch_out = spark.read.parquet(conf_b.archive)
-    assert n == loop_out.count() == batch_out.count()
-    assert days == 2
-    cols = sorted(set(loop_out.columns) - {"acq"})
-    a = sorted(map(tuple, loop_out.select(*cols).collect()))
-    b_rows = sorted(map(tuple, batch_out.select(*cols).collect()))
 
-    def denan(rows):
-        return [tuple("NaN" if isinstance(v, float) and math.isnan(v) else v for v in r) for r in rows]
+# ------------------------------------------------------- fault injection
 
-    # loop sink writes NaN-for-NULL; batch path keeps nulls (both valid);
-    # compare on non-null structure
-    assert len(a) == len(b_rows)
-    assert S.read_state(conf_b.state_path) == DAY3
+BACKLOG = {s: day_rows(DAY1) + day_rows(DAY3) for s in ("s1", "s2")}  # DAY2: skip day
+
+
+def _conf_in(tmp_path, name, station_db):
+    os.makedirs(tmp_path / name)
+    return make_conf(tmp_path / name, station_db, BACKLOG)
+
+
+def _outcome(spark, conf):
+    """Archive contents, watermark and the prom counters of the last run."""
+    rows = sorted(tuple(r) for r in spark.read.parquet(conf.archive).collect())
+    prom = {}
+    with open(os.path.join(conf.netfc_path, "aristoteles.prom")) as f:
+        for line in f:
+            if line.startswith(("aristoteles_days_written", "aristoteles_rows_written")):
+                name, value = line.split()
+                prom[name] = float(value)
+    return rows, S.read_state(conf.state_path), prom
+
+
+def _leftovers(root):
+    """Locks, swap backups and staging directories under ``root``."""
+    return [
+        os.path.join(d, n)
+        for d, dirs, files in os.walk(root)
+        for n in dirs + files
+        if n.endswith(".lock") or ".compact-" in n
+    ]
+
+
+@pytest.mark.parametrize("k", [0, 1, 2])
+def test_crash_after_kth_day_then_rerun_matches_uninterrupted(
+    spark, tmp_path, station_db, monkeypatch, k
+):
+    ref = _conf_in(tmp_path, "ref", station_db)
+    run(spark, ref, today=DAY4)
+    want_rows, want_state, want_prom = _outcome(spark, ref)
+    assert want_prom["aristoteles_days_written"] == 2 and want_state == DAY4
+
+    conf = _conf_in(tmp_path, "crash", station_db)
+    real_write_state = S.write_state
+    advanced = []
+
+    def crash_on_day_k(path, day):  # day k (0-based) is published or skipped, unwatermarked
+        if len(advanced) == k:
+            raise RuntimeError("injected crash")
+        advanced.append(day)
+        real_write_state(path, day)
+
+    monkeypatch.setattr(S, "write_state", crash_on_day_k)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run(spark, conf, today=DAY4)
+    monkeypatch.undo()
+    # the watermark stands at the last committed or skipped day
+    assert S.read_state(conf.state_path) == (advanced[-1] + dt.timedelta(days=1) if advanced else None)
+    _, _, crashed_prom = _outcome(spark, conf)  # counts what the crashed run committed
+
+    run(spark, conf, today=DAY4)
+    rows, state, prom = _outcome(spark, conf)
+    assert rows == want_rows and state == want_state
+    assert {n: crashed_prom[n] + prom[n] for n in prom} == want_prom
+    assert _leftovers(tmp_path) == []
+
+
+def test_crash_between_swap_renames_is_repaired(spark, tmp_path, station_db, monkeypatch):
+    conf = _conf_in(tmp_path, "swap", station_db)
+    run(spark, conf, today=DAY4)
+    want_rows, want_state, _ = _outcome(spark, conf)
+
+    os.unlink(conf.state_path)  # the re-run swaps over the published days
+    real_rename = os.rename
+
+    def rename(src, dst):  # the second rename: staged partition -> destination
+        if ".archive.compact-" in src:
+            raise RuntimeError("injected crash")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", rename)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run(spark, conf, today=DAY4)
+    monkeypatch.undo()
+    acq = os.path.join(conf.archive, "acq=20200601T000000Z_testinst_weather")
+    assert not os.path.exists(os.path.join(acq, "date=2020-06-01"))
+    assert os.path.isdir(os.path.join(acq, ".date=2020-06-01.compact-bak"))
+    assert S.read_state(conf.state_path) is None
+    # a killed run (no `finally`) also leaves its staging directory behind
+    os.makedirs(os.path.join(tmp_path, "swap", ".archive.compact-killed", "date=2020-06-03"))
+
+    # the next run repairs both before its gate, even when the gate defers;
+    # the day's lock stays until the day is published again
+    deferred = run(spark, dataclasses.replace(conf, expected_samples=1), today=DAY4)
+    assert deferred.incomplete_stations and deferred.days_written == 0
+    assert _outcome(spark, conf)[0] == want_rows
+    assert [p for p in _leftovers(tmp_path) if not p.endswith(".lock")] == []
+
+    run(spark, conf, today=DAY4)
+    rows, state, _ = _outcome(spark, conf)
+    assert rows == want_rows and state == want_state
+    assert _leftovers(tmp_path) == []

@@ -1,14 +1,9 @@
 """ETL-pipeline throughput benchmark: the reference-parity surface at speed.
 
 Synthesizes a multi-month, multi-station wview archive (SQLite, the
-reference's input format), then times two catch-up strategies:
-
-- ``run``            — the reference-faithful per-day loop (crash-safe
-                       per-day watermark advance, one write per day;
-                       mirrors aristoteles/aristoteles.py:332-476)
-- ``batch_write_days`` — the scale path: one ranged scan per station and
-                       ONE job writing every pending day in parallel,
-                       partitioned by (acq, date)
+reference's input format), then times ``plans.pipeline.run`` catching up
+the whole span from an empty archive: the gate, one staged write of every
+pending day, and the day-by-day publish with its watermark advance.
 
 For context, the reference processes the same workload single-threaded in
 Python with one SQLite query + one HDF5 write per day x station and a
@@ -16,14 +11,17 @@ scalar per-cell conversion loop (aristoteles.py:339-476). It publishes no
 numbers (BASELINE.md), so the comparison target is structural: rows/s
 here vs a serial interpreter loop over the same rows.
 
-Writes PIPELINE_BENCH.md. Usage: python tools/pipeline_bench.py [days]
+Rewrites the generated part of PIPELINE_BENCH.md (the text before its
+first ``## `` section). Usage: python tools/pipeline_bench.py [days]
 """
 
 from __future__ import annotations
 
 import datetime as dt
 import os
+import platform
 import shutil
+import statistics
 import sys
 import tempfile
 import time
@@ -33,6 +31,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 N_DAYS = int(sys.argv[1]) if len(sys.argv) > 1 else 180
 N_STATIONS = 3
 SAMPLES = 288
+REPEATS = 3
 
 
 def synth(workdir: str) -> "PipelineConfig":
@@ -70,8 +69,14 @@ def synth(workdir: str) -> "PipelineConfig":
     )
 
 
+def host() -> str:
+    mem = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
+    cpu = platform.processor() or platform.machine()
+    return f"{os.cpu_count()} CPUs ({cpu}), {mem:.0f} GiB RAM, Python {platform.python_version()}"
+
+
 def main() -> None:
-    from aristoteles_spark.plans.pipeline import batch_write_days, run
+    from aristoteles_spark.plans.pipeline import run
     from aristoteles_spark.session import get_spark
 
     spark = get_spark("pipeline_bench")
@@ -79,92 +84,44 @@ def main() -> None:
     workdir = tempfile.mkdtemp(prefix="plbench_")
     conf = synth(workdir)
     total_rows = N_DAYS * N_STATIONS * SAMPLES
-    start = dt.date(2020, 1, 1)
-    last = start + dt.timedelta(days=N_DAYS - 1)
-    stop = last  # treat the final synthetic day as "yesterday"
+    last = dt.date(2020, 1, 1) + dt.timedelta(days=N_DAYS - 1)
 
-    t0 = time.time()
-    res = run(spark, conf, stop=stop, today=last + dt.timedelta(days=1))
-    per_day_s = time.time() - t0
-    assert res.days_written == N_DAYS, (res.status, res.days_written)
-
-    # fresh archive + state for the batch path
-    shutil.rmtree(conf.archive, ignore_errors=True)
-    os.remove(conf.state_path)
-    t0 = time.time()
-    n, _nd = batch_write_days(spark, conf, start, last)
-    batch_s = time.time() - t0
-    assert n == total_rows, n
-
-    # third strategy: the RAW connector ingest + write floor (no
-    # watermark/sidecar/metrics machinery) — isolates what the pipeline
-    # wrapper costs on top of pure ingest at this scale.
-    import pyspark.sql.functions as F
-
-    from aristoteles_spark.plans.pipeline import convert_dataframe
-    from aristoteles_spark.sources.wview_datasource import WviewDataSource
-
-    spark.dataSource.register(WviewDataSource)
-    shutil.rmtree(conf.archive, ignore_errors=True)
-    stations_opt = ";".join(
-        f"{name}={sc['db_path']}" for name, sc in conf.stations.items()
-    )
-    t0 = time.time()
-    src = (
-        spark.read.format("wview").option("stations", stations_opt).load()
-    )
-    conv = convert_dataframe(src, strict=False)
-    ts = F.to_timestamp(F.col("dateTime"))
-    out_df = (
-        conv.withColumn("date", F.to_date(ts))
-        .withColumn(
-            "acq",
-            F.concat(
-                F.date_format(F.date_trunc("MONTH", ts), "yyyyMMdd"),
-                F.lit(f"T000000Z_{conf.instrument}_weather"),
-            ),
-        )
-        .repartition("acq", "date")
-        .sortWithinPartitions("station", "dateTime")
-    )
-    out_df.write.mode("overwrite").partitionBy("acq", "date").parquet(
-        conf.archive
-    )
-    wview_s = time.time() - t0
-    n3 = spark.read.parquet(conf.archive).count()
-    assert n3 == total_rows, n3
+    walls = []
+    for _ in range(REPEATS):
+        shutil.rmtree(conf.archive, ignore_errors=True)
+        if os.path.exists(conf.state_path):
+            os.remove(conf.state_path)
+        t0 = time.perf_counter()
+        res = run(spark, conf, stop=last)
+        walls.append(time.perf_counter() - t0)
+        assert (res.days_written, res.rows_written) == (N_DAYS, total_rows), res
+    wall = statistics.median(walls)
 
     out = (
         "# Pipeline throughput (reference-parity ETL surface)\n\n"
         f"Generated by tools/pipeline_bench.py: {N_DAYS} days x "
         f"{N_STATIONS} stations x {SAMPLES} samples = {total_rows:,} rows, "
-        "SQLite in -> converted -> partitioned parquet out "
-        "(local[32]; single machine).\n\n"
-        "| strategy | wall s | rows/s | days/s |\n|---|---|---|---|\n"
-        f"| per-day loop (`run`, reference-faithful watermark) | {per_day_s:.1f} "
-        f"| {total_rows / per_day_s:,.0f} | {N_DAYS / per_day_s:.1f} |\n"
-        f"| single-job batch (`batch_write_days`: wview ingest + state/metrics) | {batch_s:.1f} "
-        f"| {total_rows / batch_s:,.0f} | {N_DAYS / batch_s:.1f} |\n"
-        f"| single-job batch via `wview` data source (executor-parallel ingest) | {wview_s:.1f} "
-        f"| {total_rows / wview_s:,.0f} | {N_DAYS / wview_s:.1f} |\n\n"
-        "The per-day loop pays one Spark job per day for the reference's\n"
-        "crash-safe day-at-a-time watermark; the batch paths amortize the\n"
-        "whole backlog into one scan and one partitioned write through\n"
-        "the wview data source (round 3: the default --batch ingest),\n"
-        "which moves SQLite reads off the driver onto executor tasks —\n"
-        "one per station-day slice, so ingest parallelism scales with\n"
-        "executors. batch_write_days additionally carries the gate,\n"
-        "watermark, sidecars, and Observation-based metrics (which ride\n"
-        "the write job — no second ingest pass); the last row is the raw\n"
-        "ingest+write floor without that machinery.\n\n"
+        "SQLite in -> converted -> partitioned parquet out, "
+        f"`{spark.sparkContext.master}` on one host: {host()}.\n\n"
+        f"`run` catches up the whole span from an empty archive, median of "
+        f"{REPEATS} runs (walls {', '.join(f'{w:.1f}' for w in walls)} s):\n\n"
+        "| path | wall s | rows/s | days/s |\n|---|---|---|---|\n"
+        f"| `run` (one staged write, per-day publish + watermark) | {wall:.1f} "
+        f"| {total_rows / wall:,.0f} | {N_DAYS / wall:.1f} |\n\n"
         "The reference executes this workload as a serial Python loop —\n"
         "one SQLite query and one HDF5 file per day x station, scalar\n"
         "per-cell unit conversion (aristoteles/aristoteles.py:332-476) —\n"
         "and publishes no throughput numbers (BASELINE.md).\n"
     )
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(repo, "PIPELINE_BENCH.md"), "w") as f:
-        f.write(out)
+    path = os.path.join(repo, "PIPELINE_BENCH.md")
+    kept = ""
+    if os.path.exists(path):
+        with open(path) as f:
+            old = f.read()
+        kept = old[old.index("\n## "):] if "\n## " in old else ""
+    with open(path, "w") as f:
+        f.write(out + kept)
     print(out)
     shutil.rmtree(workdir, ignore_errors=True)
 
