@@ -190,10 +190,7 @@ def _ordered(d: dict) -> dict:
 def all_queries() -> dict:
     out = {}
     for m in _MODULES:
-        try:
-            mod = import_module(f"aristoteles_spark.queries.{m}")
-        except ModuleNotFoundError:
-            continue
+        mod = import_module(f"aristoteles_spark.queries.{m}")
         for name, fn in mod.QUERIES.items():
             out[name] = _stable_output_types(fn)
     return _ordered(out)
@@ -202,9 +199,5 @@ def all_queries() -> dict:
 def all_oracle_sql() -> dict[str, str]:
     out = {}
     for m in _MODULES:
-        try:
-            mod = import_module(f"aristoteles_spark.queries.{m}")
-        except ModuleNotFoundError:
-            continue
-        out.update(mod.ORACLE)
+        out.update(import_module(f"aristoteles_spark.queries.{m}").ORACLE)
     return _ordered(out)

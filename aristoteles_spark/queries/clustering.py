@@ -437,16 +437,11 @@ def _ivfpq_query_ids(vq):
 def _ivfpq_vq(spark, sf_dir):
     """Quantized-vector table shared across the sim7/sim8/sim9 family
     (operators/materialize.shared_table — the production shape: the
-    int table is written once). Under the scale sweep's
-    NO_SHARED_TABLES regime each query still materializes its own copy
-    (audit_barrier), so per-query growth ratios stay honest."""
+    int table is written once)."""
     import os
 
-    from aristoteles_spark.operators.barrier import audit_barrier
     from aristoteles_spark.operators.materialize import shared_table
 
-    if os.environ.get("SPARK_GRAFT_NO_SHARED_TABLES") == "1":
-        return audit_barrier(_vq(spark, sf_dir))
     return shared_table(
         spark,
         ("ivfpq_vq", os.path.abspath(sf_dir)),

@@ -50,10 +50,8 @@ def minhash_sig_table(spark, sf_dir):
     each consumer re-ran the tokenize+md5+minhash scan (the family's
     dominant map cost) per query.
 
-    Under SPARK_GRAFT_NO_SHARED_TABLES=1 (scale sweeps) each caller
-    builds its own frame — growth ratios stay honest; the plan audit's
-    SPARK_GRAFT_AUDIT_NO_BARRIER=1 bypasses the memo entirely so every
-    query's full strategy plan remains visible."""
+    The plan audit bypasses the memo entirely (operators/barrier.py) so
+    every query's full strategy plan remains visible."""
     import os
 
     from aristoteles_spark.operators.dedup import minhash_signatures
@@ -435,8 +433,7 @@ def winnow_fp_table(spark, sf_dir):
     writes once and every fingerprint consumer reads. Fingerprint
     selection is a pure per-row function of the text, so corpus slices
     (xm2's daily indexes) and unions with derived clone rows (fp1) are
-    value-identical to recomputing. Bypassed under the scale sweep's
-    NO_SHARED_TABLES regime and the plan audit's NO_BARRIER flag."""
+    value-identical to recomputing. Bypassed under the plan audit."""
     import os
 
     from aristoteles_spark.operators.materialize import shared_table
@@ -538,7 +535,7 @@ def simhash_sketch_table(spark, sf_dir):
     once per session (the minhash_sig_table discipline): sketches are
     per-row pure, so dd5's census and dd6's pair generation read the
     same stored table a production pipeline would write once. Bypassed
-    under NO_SHARED_TABLES / the plan audit's NO_BARRIER flag."""
+    under the plan audit."""
     import os
 
     from aristoteles_spark.operators.materialize import shared_table

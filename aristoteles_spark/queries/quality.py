@@ -480,9 +480,8 @@ def _logreg_feats_shared(spark, sf_dir):
     (operators/materialize.shared_table — production writes the feature
     table once; the tokenize/hash/label pass is the family's dominant
     map cost). Always carries the split column; qc3/qc4 simply ignore
-    it. Under the scale sweep's NO_SHARED_TABLES regime each query
-    builds its own frame (the callers' persist still de-duplicates
-    within the query), keeping growth ratios honest."""
+    it. The memoized frame is a localCheckpoint, so the callers'
+    training iterations re-read it without a persist of their own."""
     import os
 
     from aristoteles_spark.operators.materialize import shared_table
@@ -503,8 +502,7 @@ def _logreg_weights_shared(spark, sf_dir, feats):
     Training is fixed-iteration integer-exact GD, so the memoized table
     is value-identical to qc3's fresh run. qc5's weights are NOT shared
     either: its model trains on the 80% split only — a different
-    artifact. Under the scale sweep's NO_SHARED_TABLES regime qc4
-    trains its own model too (growth ratios stay honest)."""
+    artifact."""
     import os
 
     from aristoteles_spark.operators.logreg import logreg_train
@@ -537,7 +535,7 @@ def q_logreg_train(spark, sf_dir):
     scoring half of the model-registry shape) reads the shared table."""
     from aristoteles_spark.operators.logreg import logreg_train
 
-    feats = _logreg_feats_shared(spark, sf_dir).persist()
+    feats = _logreg_feats_shared(spark, sf_dir)
     w = logreg_train(
         feats, n_buckets=LOGREG_BUCKETS, iters=LOGREG_ITERS,
         lr_div=LOGREG_LR_DIV,
@@ -545,7 +543,7 @@ def q_logreg_train(spark, sf_dir):
     out = w.select(
         F.col("b").alias("bucket"), F.col("w").alias("w_q")
     ).orderBy("bucket")
-    return audit_barrier(out, feats)
+    return audit_barrier(out)
 
 
 def q_logreg_accuracy(spark, sf_dir):
@@ -555,7 +553,7 @@ def q_logreg_accuracy(spark, sf_dir):
     corpus pass after training."""
     from aristoteles_spark.operators.logreg import _pack, margin
 
-    feats = _logreg_feats_shared(spark, sf_dir).persist()
+    feats = _logreg_feats_shared(spark, sf_dir)
     w = _logreg_weights_shared(spark, sf_dir, feats)
     z = margin(F.col("bkts"), F.col("warr"))
     scored = feats.join(_pack(w)).select(
@@ -572,7 +570,7 @@ def q_logreg_accuracy(spark, sf_dir):
         )
         .alias("acc_ppm"),
     )
-    return audit_barrier(out, feats)
+    return audit_barrier(out)
 
 
 def q_logreg_holdout(spark, sf_dir):
@@ -594,7 +592,7 @@ def q_logreg_holdout(spark, sf_dir):
         margin,
     )
 
-    feats = _logreg_feats_shared(spark, sf_dir).persist()
+    feats = _logreg_feats_shared(spark, sf_dir)
     w = logreg_train(
         feats.filter(F.col("is_train") == 1).drop("is_train"),
         n_buckets=LOGREG_BUCKETS, iters=LOGREG_ITERS,
@@ -618,7 +616,7 @@ def q_logreg_holdout(spark, sf_dir):
         )
         .orderBy("is_train")
     )
-    return audit_barrier(out, feats)
+    return audit_barrier(out)
 
 
 QUERIES = {

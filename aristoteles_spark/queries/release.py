@@ -64,18 +64,19 @@ def _assert_clone_id_space(spark, sf_dir, raw) -> None:
     RL_CLONE_BASE, base docs silently take the fresh-sign clone path
     (values still correct, reuse lost) and clone ids collide with real
     ids (values WRONG). Assert the precondition once per (session,
-    sf_dir) instead of trusting it."""
+    sf_dir) instead of trusting it; ValueError if it does not hold."""
     import os
 
     key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
     if _ID_SPACE_OK.get(key):
         return
     hi = raw.agg(F.max("doc_id")).first()[0]
-    assert hi is None or hi < RL_CLONE_BASE, (
-        f"rl1: max base doc_id {hi} >= RL_CLONE_BASE {RL_CLONE_BASE}; "
-        "clone ids would collide with real ids — raise RL_CLONE_BASE "
-        "(mirrored in the oracle SQL) before running at this scale"
-    )
+    if hi is not None and hi >= RL_CLONE_BASE:
+        raise ValueError(
+            f"rl1: max base doc_id {hi} >= RL_CLONE_BASE {RL_CLONE_BASE}; "
+            "clone ids would collide with real ids — raise RL_CLONE_BASE "
+            "(mirrored in the oracle SQL) before running at this scale"
+        )
     _ID_SPACE_OK[key] = True
 
 

@@ -279,7 +279,8 @@ def q_hybrid_rrf(spark, sf_dir):
     # round-9 "withColumn→select where measured" item for ir2).
     from aristoteles_spark.queries.similarity import TRUTH_K, exact_knn_truth
 
-    assert LEG_K <= TRUTH_K, "shared truth table shallower than ir2's leg"
+    if LEG_K > TRUTH_K:
+        raise ValueError("shared truth table shallower than ir2's leg")
     vec_leg = (
         exact_knn_truth(spark, sf_dir)
         .join(

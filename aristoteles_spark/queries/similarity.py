@@ -174,8 +174,6 @@ def q_semantic_clusters(spark, sf_dir):
     connected components (operators/graph.py) as the cluster labeling —
     the 'semantic dedup' stage of a pretraining pipeline (SemDeDup-style,
     but with an exact deterministic pair predicate)."""
-    import os
-
     from aristoteles_spark.operators.barrier import barrier_disabled
     from aristoteles_spark.operators.graph import connected_components
 
@@ -184,16 +182,12 @@ def q_semantic_clusters(spark, sf_dir):
     nodes = v.select(F.col("vec_id").alias("doc"))
     # the shared edge table is already a localCheckpoint barrier, so CC
     # must not re-materialize it per invocation (round 10; see
-    # connected_components.edges_materialized). Under the audit / scale-
-    # sweep regimes _shared_pairs returns the raw builder instead and CC
-    # keeps its own barrier.
-    shared_on = not (
-        barrier_disabled()
-        or os.environ.get("SPARK_GRAFT_NO_SHARED_TABLES") == "1"
-    )
+    # connected_components.edges_materialized). Under the plan audit
+    # _shared_pairs returns the raw builder instead and CC keeps its own
+    # barrier.
     return connected_components(
         nodes, pairs, src_col="vec_a", dst_col="vec_b",
-        edges_materialized=shared_on,
+        edges_materialized=not barrier_disabled(),
     ).orderBy("node")
 
 
@@ -476,8 +470,8 @@ def exact_knn_truth(spark, sf_dir):
     so a ``rank <= k`` slice of a query's rows is bit-identical to
     ``knn_brute(v, q, k)`` for any k <= TRUTH_K (prefix property of a
     total order; pinned by tests/test_extensions.py::TestSharedKnnTruth).
-    Under the plan-audit / scale-sweep regimes shared_table degrades to
-    an inline build, so strategy plans and growth ratios stay honest."""
+    Under the plan audit shared_table degrades to an inline build, so
+    the strategy plan stays visible."""
     import os
 
     from aristoteles_spark.operators.materialize import shared_table

@@ -32,56 +32,7 @@ def _ns_timestamp_cols(path: str) -> list[str]:
     return [f.name for f in schema if str(f.type) == "timestamp[ns]"]
 
 
-# opt-in shared-scan cache (SPARK_GRAFT_CACHE_TABLES=1): the bench suite
-# reads the same ten base tables a few hundred times per pass; a real
-# analytics session over hot shared inputs would persist them once, so
-# the bench does too. Correctness/oracle runs do NOT set the flag — their
-# plans keep the raw parquet scan (PushedFilters/ReadSchema evidence).
-# Keyed by applicationId so frames from a stopped session are never reused.
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if os.environ.get("SPARK_GRAFT_CACHE_TABLES") == "1":
-        key = (
-            spark.sparkContext.applicationId,
-            os.path.abspath(sf_dir),
-            name,
-        )
-        df = _TABLE_CACHE.get(key)
-        if df is None:
-            from pyspark import StorageLevel
-
-            # Cache at full parallelism, not at scan parallelism: the test
-            # tables are single-row-group parquet, so the raw scan is ONE
-            # partition and the cache would hold ONE block. Catalyst pushes
-            # filters through Repartition, so an expensive predicate above a
-            # later fan_out() lands directly on the cached scan — and a
-            # 1-block cache then runs it on one core (measured: rl1's
-            # classifier+langid gate 8.5 s single-task vs ~0.4 s parallel at
-            # sf0.1). On a cluster the hot-table cache is partitioned by the
-            # cluster's scan splits; local single-file inputs need the
-            # explicit spread. Round-robin repartition keeps results
-            # partition-independent (no declared query depends on row
-            # placement; oracle runs don't set the cache flag at all).
-            df = (
-                _load_table_scan(spark, sf_dir, name)
-                .repartition(spark.sparkContext.defaultParallelism)
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            # the cached frame is ALREADY spread to full parallelism, so
-            # a later fan_out() over it would be a redundant corpus
-            # exchange (plus the sort-before-repartition) in every
-            # consumer query — mark it so fan_out can no-op (the flag
-            # lives only on cache-mode frames; oracle/audit/sweep runs
-            # never see it and keep their explicit repartition plans)
-            df._aspark_prespread = True
-            _TABLE_CACHE[key] = df
-        return df
-    return _load_table_scan(spark, sf_dir, name)
-
-
-def _load_table_scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     path = os.path.join(sf_dir, f"{name}.parquet")
@@ -109,16 +60,6 @@ def fan_out(df: DataFrame, parts: int | None = None) -> DataFrame:
     plain filters/aggregations (Catalyst handles those; the exchange
     would be pure overhead).
     """
-    if parts is None and getattr(df, "_aspark_prespread", False):
-        # session-cached table, already round-robin-spread to
-        # defaultParallelism at cache time: repartitioning again would
-        # shuffle the corpus once more for the same layout. Return a
-        # DETACHED alias (ADVICE r9): handing out the shared cached
-        # DataFrame object itself would let any consumer's persist()/
-        # unpersist() or attribute writes mutate the session-wide cache;
-        # the alias resolves to the same InMemoryRelation via the
-        # CacheManager, so the plan is unchanged.
-        return df.select("*")
     n = parts or df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(n)
 

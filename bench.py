@@ -29,10 +29,6 @@ os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
 # block removals landing inside a timed query added ~50 s to it (measured
 # on dd7). One explicit GC runs between the warmup and timed passes instead.
 os.environ.setdefault("SPARK_GRAFT_PERIODIC_GC", "12h")
-# persist the ten shared base tables once for the whole suite (a session
-# running 179 queries over the same hot inputs would); correctness runs
-# leave this unset so oracle-checked plans keep raw parquet scans
-os.environ.setdefault("SPARK_GRAFT_CACHE_TABLES", "1")
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -122,7 +118,6 @@ REGRESSION_NOTES: dict[str, str] = {
     "tc1_triangles": _R5_AB_CLEAN,
     "tv1_tokenizer_fertility": _R5_AB_CLEAN,
     "tx7_bpe_token_count": _R5_AB_CLEAN,
-    "dd12_lsh_quality": _R5_AB_CLEAN,
     "nd1_incremental_neardup": _R5_AB_CLEAN,
     "qc1_quality_classifier": (
         "attributed (worktree A/B 2026-08-16): 0.62 -> 0.81s (x1.31, "
@@ -231,10 +226,10 @@ def main() -> None:
     # warmup pass: JIT the codegen/broadcast/shuffle paths and populate FS
     # caches so per-query numbers reflect steady-state throughput. The
     # pass is TIMED (round 10, VERDICT r9 item 2): every one-time session
-    # build — the base-table cache, every operators/materialize shared
-    # table, the streaming staged inputs/stored indexes — lands here, so
-    # warmup_pass_sec plus the per-table shared_table build log makes
-    # that cost explicit instead of silently excluded from every number.
+    # build — every operators/materialize shared table, the streaming
+    # staged inputs/stored indexes — lands here, so warmup_pass_sec plus
+    # the per-table shared_table build log makes that cost explicit
+    # instead of silently excluded from every number.
     t_warm0 = time.time()
     for name, fn in qs.items():
         t0 = time.time()
@@ -384,13 +379,6 @@ def main() -> None:
                         "previous round (comparable across rounds); the "
                         "new fields make the previously-untimed session "
                         "build cost explicit."
-                    ),
-                    "cache_tables": (
-                        "suite runs with SPARK_GRAFT_CACHE_TABLES=1: the ten "
-                        "shared base tables persist once (MEMORY_AND_DISK) "
-                        "for the whole run; correctness/oracle runs leave the "
-                        "flag unset so their plans keep raw parquet scans "
-                        "with PushedFilters evidence."
                     ),
                 },
             },

@@ -1,13 +1,17 @@
 """bench.py drift-tripwire classifier: pure-function behavior pinned.
 
 Runs in a SUBPROCESS because importing bench mutates os.environ
-(SPARK_GRAFT_CACHE_TABLES etc.) — side effects the shared pytest Spark
+(SPARK_GRAFT_DRIVER_MEM etc.) — side effects the shared pytest Spark
 session must not inherit.
 """
 
+import ast
 import json
+import os
 import subprocess
 import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _PROG = r"""
 import json, sys
@@ -63,3 +67,22 @@ def test_classifier_buckets_and_envelope():
     # env ratio takes the WORSE of the two probes; None when no history
     assert json.loads(lines[-2]) == 3.0
     assert json.loads(lines[-1]) is None
+
+
+def test_bench_dict_literals_have_no_repeated_keys():
+    # a repeated key in a dict literal silently keeps only the last value
+    with open(os.path.join(ROOT, "bench.py")) as f:
+        tree = ast.parse(f.read())
+    repeated = []
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Dict):
+            continue
+        seen = set()
+        for k in node.keys:
+            if k is None:  # ** unpacking
+                continue
+            dumped = ast.dump(k)
+            if dumped in seen:
+                repeated.append((k.lineno, ast.unparse(k)))
+            seen.add(dumped)
+    assert not repeated, f"repeated dict keys in bench.py: {repeated}"

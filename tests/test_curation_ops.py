@@ -305,3 +305,14 @@ def test_repetition_rules_pinned_and_dup5_fires(spark, tmp_path):
     assert got[1][3] == 0 and got[1][2] > 0  # spam fails, dup5 nonzero
     assert got[2][2] == math.floor(10 * 1e6 / 11)  # two occurrences cover 10/11
     assert got[6][3] == 1
+
+
+def test_clone_id_space_violation_raises(spark, tmp_path):
+    from aristoteles_spark.queries.release import (
+        RL_CLONE_BASE,
+        _assert_clone_id_space,
+    )
+
+    raw = spark.createDataFrame([(1,), (RL_CLONE_BASE,)], "doc_id long")
+    with pytest.raises(ValueError, match="RL_CLONE_BASE"):
+        _assert_clone_id_space(spark, str(tmp_path), raw)

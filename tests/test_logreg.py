@@ -132,3 +132,16 @@ class TestLogregQueries:
         rows = q_logreg_train(spark, "/root/testdata/sf0.001").collect()
         assert len(rows) == LOGREG_BUCKETS
         assert any(r.w_q != 0 for r in rows)  # it trained on something
+
+    def test_feature_frame_is_one_shared_checkpoint(self, spark):
+        # qc3-5 train over this frame without a persist of their own:
+        # every GD iteration re-reads the memoized checkpoint, so the
+        # tokenize/hash/label pass runs once per session (the plan audit
+        # bypasses the memo and cannot see this)
+        from aristoteles_spark.queries.quality import _logreg_feats_shared
+        from tests.conftest import SF_SMOKE
+
+        feats = _logreg_feats_shared(spark, SF_SMOKE)
+        assert feats is _logreg_feats_shared(spark, SF_SMOKE)
+        plan = feats._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" in plan and "parquet" not in plan.lower(), plan

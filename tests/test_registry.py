@@ -10,6 +10,8 @@ import glob
 import json
 import os
 
+import pytest
+
 from tests.conftest import SF_SMOKE
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -102,3 +104,15 @@ def test_final_schemas_driver_canonicalizable(spark):
         "driver-uncanonicalizable final columns (add a terminal "
         "to_json/double cast + matching oracle): " + "; ".join(offenders)
     )
+
+
+def test_missing_query_module_fails_loudly(monkeypatch):
+    import aristoteles_spark.queries as registry
+
+    monkeypatch.setattr(
+        registry, "_MODULES", [*registry._MODULES, "no_such_module"]
+    )
+    with pytest.raises(ModuleNotFoundError):
+        registry.all_queries()
+    with pytest.raises(ModuleNotFoundError):
+        registry.all_oracle_sql()

@@ -73,10 +73,9 @@ print("ABRESULT " + json.dumps(
 def run_session(tree: str, names: list[str], passes: int) -> dict:
     env = dict(os.environ)
     # match bench.py's session shape so numbers are comparable to
-    # BENCH_DETAIL (cached base tables, no periodic GC, big driver)
+    # BENCH_DETAIL (no periodic GC, big driver)
     env.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
     env.setdefault("SPARK_GRAFT_PERIODIC_GC", "12h")
-    env.setdefault("SPARK_GRAFT_CACHE_TABLES", "1")
     p = subprocess.run(
         [sys.executable, "-c", _RUNNER, tree, ",".join(names), str(passes)],
         env=env,

@@ -69,7 +69,6 @@ def main() -> None:
         if a.startswith("--passes"):
             passes = int(a.split("=", 1)[1])
 
-    os.environ.setdefault("SPARK_GRAFT_CACHE_TABLES", "1")
     os.environ.setdefault("SPARK_GRAFT_PERIODIC_GC", "12h")
     import __spark_entry__ as entrymod
     from aristoteles_spark.session import get_spark
