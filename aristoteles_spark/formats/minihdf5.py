@@ -285,7 +285,8 @@ class MiniHDF5Writer:
             "<BBBBQQQQ", 2, 8, 8, 0, 0, UNDEF, eof, root_addr
         )
         sb += struct.pack("<I", lookup3(sb))
-        assert len(sb) == 48
+        if len(sb) != 48:
+            raise RuntimeError(f"superblock is {len(sb)} bytes, expected 48")
         return sb + b"".join(blocks)
 
     def write(self, path: str) -> int:

@@ -159,7 +159,8 @@ def real_codec_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 img = px.reshape(4, 4)
                 payload = encode_png(img, filter_type=int(did) % 5)
                 back = decode_png(payload)
-                assert np.array_equal(back, img)
+                if not np.array_equal(back, img):
+                    raise RuntimeError("PNG round trip changed the image")
                 rows.append(
                     (did, back.shape[1], back.shape[0], 1,
                      float(back.mean()) / 255.0)
@@ -431,7 +432,8 @@ def real_jpeg_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 img[8:16, 8:16] = vals[3]
                 payload = encode_jpeg(img, quality=50, restart_interval=1)
                 back = decode_jpeg(payload)
-                assert np.array_equal(back, img)  # DC-exact by construction
+                if not np.array_equal(back, img):  # DC-exact by construction
+                    raise RuntimeError("JPEG round trip changed the image")
                 rows.append(
                     (did, back.shape[1], back.shape[0], 1,
                      float(back.mean()) / 255.0)
@@ -483,7 +485,8 @@ def real_progressive_jpeg_features(
                 img[8:16, 8:16] = vals[3]
                 payload = encode_jpeg_progressive(img, quality=50)
                 back = decode_jpeg(payload)  # dispatches on SOF2
-                assert np.array_equal(back, img)  # DC-exact by construction
+                if not np.array_equal(back, img):  # DC-exact by construction
+                    raise RuntimeError("progressive JPEG round trip changed the image")
                 rows.append(
                     (did, back.shape[1], back.shape[0], 1,
                      float(back.mean()) / 255.0)
@@ -518,7 +521,8 @@ def real_gif_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 img = px.reshape(4, 4)
                 payload = encode_gif(img, interlace=bool(int(did) % 2))
                 back = decode_gif(payload)
-                assert np.array_equal(back, img)
+                if not np.array_equal(back, img):
+                    raise RuntimeError("GIF round trip changed the image")
                 rows.append(
                     (did, back.shape[1], back.shape[0], 1,
                      float(back.mean()) / 255.0)
@@ -550,7 +554,8 @@ def real_tiff_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 px = np.frombuffer(bytes.fromhex(hexd), dtype=np.uint8)
                 img = px.reshape(4, 4)
                 back = decode_tiff(encode_tiff(img))
-                assert np.array_equal(back, img)
+                if not np.array_equal(back, img):
+                    raise RuntimeError("TIFF round trip changed the image")
                 rows.append(
                     (did, back.shape[1], back.shape[0], 1,
                      float(back.mean()) / 255.0)
@@ -588,8 +593,8 @@ def real_webp_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 else:
                     payload = encode_webp(img, subtract_green=True)
                 back = decode_webp(payload)
-                assert back.shape == (4, 4, 3)
-                assert np.array_equal(back[:, :, 0], img)
+                if back.shape != (4, 4, 3) or not np.array_equal(back[:, :, 0], img):
+                    raise RuntimeError("WebP round trip changed the image")
                 rows.append(
                     (did, 4, 4, 1, float(img.mean()) / 255.0)
                 )

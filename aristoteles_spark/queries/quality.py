@@ -238,8 +238,8 @@ def q_repetition_rules(spark, sf_dir):
     start lists would go quadratic) then counts the distinct covered
     positions. The first formulation shipped the gram stream through
     partial-aggregated (doc, gram) groupBys — correct, but it shuffled
-    ~1 row per gram occurrence (15.9 MB / 542k rows at sf0.1, METRICS
-    round 6) because a (doc_id, gram) key cannot collapse across docs;
+    ~1 row per gram occurrence (15.9 MB / 542k rows at sf0.1 in round
+    6) because a (doc_id, gram) key cannot collapse across docs;
     the in-row form measured 1.4x faster at the 100x replica and moves
     nothing across the network at 100 TB. Ratios are
     floor(1e6 * a / b) on integers: one exact double division + floor,

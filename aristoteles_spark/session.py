@@ -45,10 +45,7 @@ def get_spark(
         # 10000, mirrored A/B sum-of-mins 39.5 -> 30.3 s). Generated
         # classes are a few KB each; real usage is a few thousand
         # entries, so the cap is headroom, not a memory commitment.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "10000"),
-        )
+        .config("spark.sql.codegen.cache.maxEntries", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

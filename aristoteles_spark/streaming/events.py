@@ -200,8 +200,8 @@ def user_ewma_stateful(events: DataFrame) -> DataFrame:
     the batch fold over the full ordered history — PROVIDED event time
     does not regress across batches (file-source appends here; a
     late-data stream would need the fold keyed into a timer/watermark
-    pattern instead, and the kernel asserts monotonicity rather than
-    silently folding out of order)."""
+    pattern instead, and the kernel checks monotonicity rather than
+    silently folding out of order; a regression raises ValueError)."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     def update(key, pdfs, state: GroupState):
@@ -217,10 +217,8 @@ def user_ewma_stateful(events: DataFrame) -> DataFrame:
             pdf = pdf.assign(_us=pdf["ts"].astype("int64"))
             pdf = pdf.sort_values(["_us", "event_id"])
             first = pdf.iloc[0]
-            assert (int(first["_us"]), int(first["event_id"])) > (
-                last_us,
-                last_id,
-            ), "event time regressed across microbatches"
+            if (int(first["_us"]), int(first["event_id"])) <= (last_us, last_id):
+                raise ValueError("event time regressed across microbatches")
             for v in pdf["value"]:
                 ewma = v if ewma is None else ewma * 0.875 + v * 0.125
             n += len(pdf)

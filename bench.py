@@ -12,10 +12,15 @@ this script; stdout carries only the headline.
 Runs every declared query at $SPARK_GRAFT_SF_DIR (default sf0.1) on
 local[$SPARK_GRAFT_CPUS]. Each query is timed end-to-end including the
 action (collect), after a one-query warmup to amortize JVM/session startup.
+BENCH_DETAIL.json also records, per query, the obs/profile evidence of its
+faster timed pass (jobs, tasks, bytes, driver seconds, executed-plan hash),
+the host and a source digest; the drift tripwire labels from those.
 """
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import json
 import os
 import sys
@@ -30,160 +35,56 @@ os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
 # on dd7). One explicit GC runs between the warmup and timed passes instead.
 os.environ.setdefault("SPARK_GRAFT_PERIODIC_GC", "12h")
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod
+from aristoteles_spark.obs.profile import profile
+from aristoteles_spark.operators.materialize import BUILD_LOG
 from aristoteles_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Measured causes for per-query regressions the tripwire below flags.
-# An entry here means the drift was bisected/attributed, not waved off;
-# delete entries once the query returns under 1.3x of its old time.
-_BARRIER_TRADE = (
-    "attributed (bisected 2026-08-15): _finalize barrier — eager "
-    "checkpoint + cache release defeating repeated-run warm-block "
-    "reuse; returns to round-3 time with the barrier disabled. Kept "
-    "for suite cache health; see BENCH_DETAIL notes."
-)
-_R5_AB_CLEAN = (
-    "attributed (worktree A/B 2026-08-16): round-4 vs round-5 trees "
-    "timed alternately in identical fresh sessions x2 — code-for-code "
-    "equal within noise (tc1: r5 code measured 1.8x FASTER than r4, "
-    "1.54s vs 2.6-3.0s; ds1/tv1/dd12/nd1 equal; tx7 slightly faster). "
-    "The r4->r5 BENCH_DETAIL delta is full-suite context (224-query "
-    "session order/cache pressure) or probe-invisible host steal, not "
-    "a code regression."
-)
-_R6_AB_CLEAN = (
-    "attributed (worktree A/B + window diff 2026-08-16, AB_BENCH.json): "
-    "the trees that produced the two BENCH_DETAILs (e4fc264 vs r6 final) "
-    "differ ONLY by empty-input early-return guards outside these "
-    "queries' plans (git diff: relational/versioning query files and the "
-    "tx3/tx14/dd7/sim2 functions untouched; the operator diffs are "
-    "empty-corpus guards) — the executed plans are byte-identical. "
-    "Alternating fresh-session A/B x2 per tree (tools/ab_bench.py) times "
-    "them equal within host noise: B/A mins 1.02-1.49 while the "
-    "SAME-tree session spread reached 2.3x (dd7) and the sched probe "
-    "swung 1.8x during the A/B — suite context/host steal, not code."
-)
-_R7_AB_CLEAN = (
-    "attributed (worktree A/B 2026-08-16 round 7, AB_BENCH.json): "
-    "flagged at +0.18s/+0.16s absolute between two SAME-DAY bench runs "
-    "whose window diff never touches these functions (q_exact / "
-    "mm1 binary stats are byte-identical; the window adds unrelated "
-    "queries to the same modules). Alternating fresh-session A/B x2 "
-    "times the trees at B/A 1.05 and 1.10 with same-tree session "
-    "spreads of 1.23-1.25 — host noise, not code."
-)
-_R8_TX4_NOTE = (
-    "attributed (plan-hash + worktree A/B 2026-08-16 round 8, "
-    "AB_BENCH.json): the r7 flag (0.464 -> 0.671s, x1.45, "
-    "env_attributed false because the CPU probe got FASTER) has no "
-    "possible code cause — tx4's EXECUTED plan is byte-identical "
-    "(same md5, 46be9ee1) between the r6-final worktree and HEAD, so "
-    "the code cannot run differently. The mirrored fresh-session A/B "
-    "that measured B/A 1.34 is itself the evidence for host steal: the "
-    "r6 tree's own sessions drifted 0.639 -> 0.821s (x1.28) WITHIN the "
-    "run and the scheduler probe swung 2.76 -> 4.17s (x1.5) — the "
-    "documented hourly-steal pattern, not code."
-)
-_R10_UNMEMO = (
-    "deliberate (round 10, VERDICT r9 item 3): the round-9 session memo "
-    "made this query's timed run a warm read of its own declared "
-    "computation (qc3's training / dd12's evaluation sample + exact-"
-    "Jaccard truth). The memo is removed; the query now performs that "
-    "work on every invocation. The slowdown vs the memoized round-9 "
-    "number is the honest cost, not a regression."
-)
-REGRESSION_NOTES: dict[str, str] = {
-    "qc3_logreg_train": _R10_UNMEMO,
-    "dd12_lsh_quality": _R10_UNMEMO,
-    "tx4_fingerprint": _R8_TX4_NOTE,
-    "dd1_exact_groups": _R7_AB_CLEAN,
-    "mm1_binary_stats": _R7_AB_CLEAN,
-    "dd7_dup_clusters": _R6_AB_CLEAN,
-    "j3_semi_join": _R6_AB_CLEAN,
-    "cd1_snapshot_diff": _R6_AB_CLEAN,
-    "j8_outer_count_dist": _R6_AB_CLEAN,
-    "p4_conditional_convert": _R6_AB_CLEAN,
-    "sim2_knn_lsh": _R6_AB_CLEAN,
-    "tx3_langid": _R6_AB_CLEAN,
-    "tx14_bpe_encode": _R6_AB_CLEAN,
-    "dd3_jaccard_pairs": _BARRIER_TRADE,
-    "dd4_minhash_lsh_pairs": _BARRIER_TRADE,
-    "sk1_kmv_distinct": _BARRIER_TRADE,
-    "sk4_kmv_overlap": _BARRIER_TRADE,
-    "ds1_dsir_select": _R5_AB_CLEAN,
-    "tc1_triangles": _R5_AB_CLEAN,
-    "tv1_tokenizer_fertility": _R5_AB_CLEAN,
-    "tx7_bpe_token_count": _R5_AB_CLEAN,
-    "nd1_incremental_neardup": _R5_AB_CLEAN,
-    "qc1_quality_classifier": (
-        "attributed (worktree A/B 2026-08-16): 0.62 -> 0.81s (x1.31, "
-        "0.19s absolute) flagged with clean calibration; the query's "
-        "code is docstring-only changed since round 5 (git diff) and "
-        "alternating fresh-session A/B times the two trees equal within "
-        "noise (r5 1.15-1.25s vs r6 1.21-1.32s) — suite-context/noise, "
-        "not code drift."
-    ),
-}
+
+def _source_digest() -> str:
+    """One md5 over every package source file: query bodies, UDFs and
+    session conf all live under aristoteles_spark/."""
+    h = hashlib.md5()
+    pattern = os.path.join(ROOT, "aristoteles_spark", "**", "*.py")
+    for path in sorted(glob.glob(pattern, recursive=True)):
+        h.update(os.path.relpath(path, ROOT).encode())
+        with open(path, "rb") as f:
+            h.update(f.read())
+    return h.hexdigest()
 
 
-def _timed(fn) -> float:
-    t0 = time.time()
-    fn()
-    return time.time() - t0
-
-
-def _env_ratio(calibration, sched_calibration, prev_calibration, prev_sched):
-    """Environmental envelope: if either calibration probe slowed down
-    since the previous committed detail, per-query drift up to ~that
-    ratio (plus 15% headroom) is the machine, not the query."""
-    env_ratio = None
-    if prev_calibration:
-        env_ratio = round(calibration / prev_calibration, 2)
-    if prev_sched:
-        sched_ratio = round(sched_calibration / prev_sched, 2)
-        env_ratio = max(env_ratio or 0, sched_ratio)
-    return env_ratio
-
-
-def _classify_regressions(
-    timings: dict[str, float],
-    prev_timings: dict[str, float],
-    env_ratio: float | None,
-) -> dict[str, dict]:
-    """Pure tripwire classifier (unit-tested in tests/test_bench_tripwire.py):
-    flag >1.3x drift vs the previous detail, attach a REGRESSION_NOTES
-    measured cause when one exists, else auto-annotate drift inside the
-    calibration envelope as host noise — annotated, NOT exonerated
-    (ADVICE r5): env-attributed entries carry env_attributed=True and
-    surface as their own named stderr bucket, because a real ~1.4x code
-    regression landing during a slow-host hour fits the envelope too."""
+def _classify_regressions(now: dict, prev: dict) -> dict[str, dict]:
+    """Pure tripwire classifier over two BENCH_DETAIL dicts (unit-tested in
+    tests/test_bench_tripwire.py): flag >1.3x drift vs the previous detail
+    and label each flagged query from recorded facts, never from prose:
+    plan_changed (executed-plan hash differs), code_changed (same plan,
+    package source differs), same_program (neither changed: the host or
+    the suite around the query moved) or no_baseline (no previous hash)."""
     regressions: dict[str, dict] = {}
-    for name, now in timings.items():
-        old = prev_timings.get(name)
+    prev_profile = prev.get("profile", {})
+    for name, sec in now["queries"].items():
+        old = prev.get("queries", {}).get(name)
         # ignore sub-0.15s absolute drift: trigger-timing noise on tiny
         # queries would make the tripwire cry wolf
-        if old and now / old > 1.3 and now - old >= 0.15:
-            ratio = round(now / old, 2)
-            note = REGRESSION_NOTES.get(name)
-            env = False
-            if note is None and env_ratio and env_ratio > 1.25 and ratio <= env_ratio * 1.15:
-                note = (
-                    f"within host inflation envelope: calibration probe "
-                    f"x{env_ratio} vs previous detail (shared-VM slowdown, "
-                    f"not query drift)"
-                )
-                env = True
-            regressions[name] = {
-                "prev_sec": old,
-                "now_sec": now,
-                "ratio": ratio,
-                "note": note,
-                "env_attributed": env,
-            }
+        if not old or sec / old <= 1.3 or sec - old < 0.15:
+            continue
+        old_hash = prev_profile.get(name, {}).get("plan_hash")
+        if old_hash is None:
+            cause = "no_baseline"
+        elif old_hash != now["profile"][name]["plan_hash"]:
+            cause = "plan_changed"
+        elif prev.get("source_digest") != now["source_digest"]:
+            cause = "code_changed"
+        else:
+            cause = "same_program"
+        regressions[name] = {
+            "prev_sec": old, "now_sec": sec, "ratio": round(sec / old, 2), "cause": cause,
+        }
     return regressions
 
 
@@ -192,37 +93,6 @@ def main() -> None:
     spark = get_spark("bench")
     qs = entrymod.queries()
 
-    # host calibration probe (round 5): a fixed pure-CPU codegen job
-    # whose only variable is the machine itself. Round 5 measured the
-    # whole suite ~1.5x slower than the committed detail AND proved the
-    # round-4 tree reproduces the same inflation in the same session —
-    # the host (a shared VM) is simply slower some hours than others,
-    # sustained, not in bursts the 2-pass min can dodge. Recording the
-    # probe time lets the NEXT run's tripwire separate "this query got
-    # slower" from "the machine got slower": flagged entries whose ratio
-    # sits inside the calibration envelope are auto-annotated instead of
-    # demanding a per-query investigation of environmental noise.
-    probe = lambda: spark.range(1_000_000_000).selectExpr(  # noqa: E731
-        "bit_xor(xxhash64(id)) AS h"  # xor: overflow-free under ANSI
-    ).collect()
-
-    def sched_probe():
-        # 24 tiny jobs: measures scheduler/py4j round-trip latency, the
-        # component the shared VM's slow hours inflate hardest (round 5:
-        # small scheduling-heavy queries drifted 1.5x while the pure-CPU
-        # probe barely moved — the two probes bound different modes)
-        for _ in range(24):
-            spark.range(1000).count()
-
-    warmup_timings: dict[str, float] = {}
-    probe()  # warm codegen
-    sched_probe()
-    # probed once per timed pass below (inside the measurement window —
-    # a start-only probe misses interference arriving mid-suite, which
-    # round 5 observed); the envelope uses the MAX across passes
-    calibrations: list[float] = [round(_timed(probe), 3)]
-    sched_calibrations: list[float] = [round(_timed(sched_probe), 3)]
-
     # warmup pass: JIT the codegen/broadcast/shuffle paths and populate FS
     # caches so per-query numbers reflect steady-state throughput. The
     # pass is TIMED (round 10, VERDICT r9 item 2): every one-time session
@@ -230,18 +100,14 @@ def main() -> None:
     # staged inputs/stored indexes — lands here, so warmup_pass_sec plus
     # the per-table shared_table build log makes that cost explicit
     # instead of silently excluded from every number.
+    warmup_timings: dict[str, float] = {}
     t_warm0 = time.time()
     for name, fn in qs.items():
         t0 = time.time()
         fn(spark, SF_DIR).collect()
         warmup_timings[name] = round(time.time() - t0, 3)
     warmup_pass_sec = round(time.time() - t_warm0, 3)
-    try:
-        from aristoteles_spark.operators.materialize import BUILD_LOG
-
-        shared_builds = dict(sorted(BUILD_LOG.items()))
-    except ImportError:
-        shared_builds = {}
+    shared_builds = dict(sorted(BUILD_LOG.items()))
     one_time_build_sec = round(sum(shared_builds.values()), 3)
 
     # two timed passes, per-query MIN: external interference on this host
@@ -252,140 +118,68 @@ def main() -> None:
     # inflated whichever contiguous stretch of queries it overlapped by
     # 5-25x). The burst can overlap one pass's stretch but not the same
     # query in both passes, so the min recovers steady-state throughput.
+    # Each query's profile comes from its faster pass.
     timings: dict[str, float] = {}
-    for _ in range(2):
+    profiles: dict[str, dict] = {}
+    hashes: dict[str, set[str]] = {}
+    for n in range(2):
         # reclaim the previous pass's dead checkpoint/persist blocks at a
         # deterministic point so no GC pause lands inside a timed query
         spark._jvm.System.gc()
         for name, fn in qs.items():
-            t0 = time.time()
-            fn(spark, SF_DIR).collect()
-            dt = round(time.time() - t0, 3)
-            if name not in timings or dt < timings[name]:
-                timings[name] = dt
-        calibrations.append(round(_timed(probe), 3))
-        sched_calibrations.append(round(_timed(sched_probe), 3))
+            prof = profile(spark, name, fn, SF_DIR, n)
+            hashes.setdefault(name, set()).add(prof["plan_hash"])
+            if name not in timings or prof["wall_s"] < timings[name]:
+                timings[name] = prof["wall_s"]
+                profiles[name] = prof
 
-    calibration = max(calibrations)
-    sched_calibration = max(sched_calibrations)
     total = round(sum(timings.values()), 3)
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "BENCH_DETAIL.json")
+    detail_path = os.path.join(ROOT, "BENCH_DETAIL.json")
+    detail = {
+        "metric": "declared_query_suite_wall",
+        "value": total,
+        "unit": "sec",
+        "queries": timings,
+        "sf": sf_val,
+        "host": {
+            "cpus": os.cpu_count(),
+            "memory_gib": round(os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30, 1),
+            "spark_cores": spark.sparkContext.defaultParallelism,
+        },
+        "source_digest": _source_digest(),
+        "profile": profiles,
+        "plan_hash_unstable": sorted(n for n, h in hashes.items() if len(h) > 1),
+        "warmup_pass_sec": warmup_pass_sec,
+        "warmup_timings": warmup_timings,
+        "one_time_build_sec": one_time_build_sec,
+        "shared_table_build_sec": shared_builds,
+    }
 
     # drift tripwire (round 5): the round-3 dd10 and round-4 dd4
     # regressions were both first caught by the JUDGE diffing committed
     # BENCH_DETAILs between rounds. Diff against the previous committed
-    # detail here instead, so unexplained >1.3x drift fails loudly at
-    # bench time. Every flagged entry must either carry a note in
-    # REGRESSION_NOTES (a measured cause) or get investigated before
-    # commit; the flag list itself is written into the new detail file.
-    prev_timings: dict[str, float] = {}
-    prev_calibration = prev_sched = None
+    # detail here instead, so >1.3x drift is reported at bench time with
+    # its recorded cause; the flag list is written into the new detail.
     try:
         with open(detail_path) as f:
             prev_detail = json.load(f)
-        prev_timings = prev_detail.get("queries", {})
-        prev_calibration = prev_detail.get("calibration_sec")
-        prev_sched = prev_detail.get("sched_calibration_sec")
     except (OSError, ValueError):
-        pass
-    env_ratio = _env_ratio(
-        calibration, sched_calibration, prev_calibration, prev_sched
-    )
-    regressions = _classify_regressions(timings, prev_timings, env_ratio)
-    env_attributed = [n for n, r in regressions.items() if r["env_attributed"]]
-    unexplained = sorted(n for n, r in regressions.items() if not r["note"])
+        prev_detail = {}
+    regressions = _classify_regressions(detail, prev_detail)
+    detail["regressions_vs_prev"] = regressions
     if regressions:
+        by_cause: dict[str, list[str]] = {}
+        for name, r in sorted(regressions.items()):
+            by_cause.setdefault(r["cause"], []).append(name)
         print(
             f"[bench] {len(regressions)} quer{'y' if len(regressions) == 1 else 'ies'} "
-            f">1.3x slower than previous BENCH_DETAIL "
-            f"(calibration x{env_ratio or '?'}); "
-            f"unexplained: {unexplained or 'none'}; "
-            f"env-attributed (verify on a quiet host): "
-            f"{sorted(env_attributed) or 'none'}",
+            f">1.3x slower than previous BENCH_DETAIL: "
+            + "; ".join(f"{c}: {names}" for c, names in sorted(by_cause.items())),
             file=sys.stderr,
         )
     with open(detail_path, "w") as f:
-        json.dump(
-            {
-                "metric": "declared_query_suite_wall",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "sf": sf_val,
-                "warmup_pass_sec": warmup_pass_sec,
-                "warmup_timings": warmup_timings,
-                "one_time_build_sec": one_time_build_sec,
-                "shared_table_build_sec": shared_builds,
-                "calibration_sec": calibration,
-                "calibration_runs": calibrations,
-                "sched_calibration_sec": sched_calibration,
-                "sched_calibration_runs": sched_calibrations,
-                "regressions_vs_prev": regressions,
-                "notes": {
-                    "round5_environment": (
-                        "the round-5 flagged set (20 small text/document "
-                        "queries at 1.3-1.6x) was A/B-tested against the "
-                        "round-4 TREE in the same session: the old tree "
-                        "reproduces the same inflation (e.g. j1 2.2x, "
-                        "tx3 1.8x), so the drift is the shared VM, not "
-                        "code — hence the calibration probe now recorded "
-                        "in calibration_sec."
-                    ),
-                    "suite_growth": (
-                        "round 3 grew the suite 179 -> 188 queries "
-                        "(mm13, io10-io13, st12, sk3, sk4, gr3); compare "
-                        "totals per-query or on the common subset, not "
-                        "raw (round-3 common-179 subset runs ~8% faster "
-                        "than round 2 after the table-cache + minhash "
-                        "strategy fixes)."
-                    ),
-                    "g9_approx_stats": (
-                        "gate query: computes exact count_distinct + exact "
-                        "percentile ALONGSIDE the sketches to bound them "
-                        "(tolerance oracle). The exact side is ~90% of its "
-                        "cost and exists only to verify the sketch; at "
-                        "production scale you run the sketch alone. Kept "
-                        "as-is deliberately — see queries/analytics.py "
-                        "q_approx_stats docstring (single-agg form measured "
-                        "12x slower; two-agg join is the fast shape)."
-                    ),
-                    "dd3_dd4_sk1_sk4_barrier_trade": (
-                        "round-4 regression cluster, bisected 2026-08-15 "
-                        "(VERDICT r4 item 2): with the _finalize barrier "
-                        "disabled each query returns to its round-3 time "
-                        "(dd3 2.80->1.67 s, dd4 4.60->2.62 s, sk1 "
-                        "1.02->0.77 s, sk4 0.90->0.38 s at sf0.1), so the "
-                        "entire delta is the barrier: the eager "
-                        "localCheckpoint write plus — dominant — the "
-                        "unpersist that stops Spark's CacheManager from "
-                        "reusing the previous identical call's warm "
-                        "intermediate blocks (a repeated-run bench "
-                        "artifact; a production run builds each table "
-                        "once). Kept deliberately: the release is what "
-                        "fixed round 3's suite-wide cache-pressure drift, "
-                        "and the 100x sweep proves all four sublinear."
-                    ),
-                    "one_time_builds": (
-                        "round 10 (VERDICT r9 item 2): the warmup pass is "
-                        "now timed — warmup_pass_sec is its total wall, "
-                        "warmup_timings the per-query warmup walls (one-"
-                        "time builds INCLUDED), shared_table_build_sec the "
-                        "per-table build cost of every operators/"
-                        "materialize shared table and one_time_build_sec "
-                        "their sum. The timed per-query numbers keep the "
-                        "same min-of-2-warm-passes methodology as every "
-                        "previous round (comparable across rounds); the "
-                        "new fields make the previously-untimed session "
-                        "build cost explicit."
-                    ),
-                },
-            },
-            f,
-            indent=1,
-            sort_keys=True,
-        )
+        json.dump(detail, f, indent=1, sort_keys=True)
     slowest = dict(
         sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[:10]
     )

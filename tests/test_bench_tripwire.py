@@ -15,58 +15,68 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _PROG = r"""
 import json, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])
 import bench
 
-timings = {
+def detail(secs, hashes, digest):
+    return {
+        "queries": secs,
+        "profile": {n: {"plan_hash": h} for n, h in hashes.items()},
+        "source_digest": digest,
+    }
+
+prev = detail(
+    {"fast_small_drift": 0.05, "steady": 0.98, "new_plan": 1.0,
+     "same": 1.0, "unprofiled": 1.0},
+    {"fast_small_drift": "a", "steady": "a", "new_plan": "a", "same": "a"},
+    "d1",
+)
+now_secs = {
     "fast_small_drift": 0.10,   # >1.3x but < 0.15s absolute: ignored
-    "noted_query": 2.0,         # has a REGRESSION_NOTES measured cause
-    "env_query": 1.40,          # inside the env envelope -> annotated
-    "real_regression": 3.0,     # outside the envelope -> unexplained
     "steady": 1.0,              # no drift
+    "new_plan": 2.0,
+    "same": 2.0,
+    "unprofiled": 2.0,          # previous detail has no profile for it
 }
-prev = {
-    "fast_small_drift": 0.05,
-    "noted_query": 1.0,
-    "env_query": 1.0,
-    "real_regression": 1.0,
-    "steady": 0.98,
-}
-bench.REGRESSION_NOTES = {"noted_query": "measured cause X"}
-out = bench._classify_regressions(timings, prev, env_ratio=1.30)
-print(json.dumps(out))
-print(json.dumps(bench._env_ratio(2.0, 3.0, 1.0, 1.0)))
-print(json.dumps(bench._env_ratio(1.0, 1.0, None, None)))
+now_hashes = {n: "a" for n in now_secs}
+now_hashes["new_plan"] = "b"
+print(json.dumps(bench._classify_regressions(
+    detail(now_secs, now_hashes, "d1"), prev)))
+print(json.dumps(bench._classify_regressions(
+    detail(now_secs, now_hashes, "d2"), prev)))
+print(json.dumps(bench._classify_regressions(detail(now_secs, now_hashes, "d1"), {})))
 """
 
 
-def test_classifier_buckets_and_envelope():
+def test_classifier_labels_from_recorded_facts():
     r = subprocess.run(
-        [sys.executable, "-c", _PROG], capture_output=True, text=True
+        [sys.executable, "-c", _PROG, ROOT], capture_output=True, text=True
     )
     assert r.returncode == 0, r.stderr
-    lines = r.stdout.strip().splitlines()
-    out = json.loads(lines[-3])
+    same_src, new_src, no_prev = map(json.loads, r.stdout.strip().splitlines()[-3:])
 
     # sub-0.15s absolute drift and steady queries never flag
-    assert "fast_small_drift" not in out and "steady" not in out
+    for out in (same_src, new_src):
+        assert "fast_small_drift" not in out and "steady" not in out
 
-    # measured-cause note wins and is NOT env-attributed
-    assert out["noted_query"]["note"] == "measured cause X"
-    assert out["noted_query"]["env_attributed"] is False
+    causes = {n: e["cause"] for n, e in same_src.items()}
+    assert causes == {
+        "new_plan": "plan_changed",
+        "same": "same_program",
+        "unprofiled": "no_baseline",
+    }
+    assert same_src["same"]["ratio"] == 2.0 and same_src["same"]["prev_sec"] == 1.0
 
-    # envelope drift (1.4 <= 1.30 * 1.15) is annotated AND marked —
-    # surfaced, not silently exonerated (ADVICE r5)
-    assert out["env_query"]["env_attributed"] is True
-    assert "host inflation envelope" in out["env_query"]["note"]
+    # same plan hash but a different source digest: the code moved
+    causes = {n: e["cause"] for n, e in new_src.items()}
+    assert causes == {
+        "new_plan": "plan_changed",
+        "same": "code_changed",
+        "unprofiled": "no_baseline",
+    }
 
-    # drift past the envelope stays unexplained (note None)
-    assert out["real_regression"]["note"] is None
-    assert out["real_regression"]["env_attributed"] is False
-
-    # env ratio takes the WORSE of the two probes; None when no history
-    assert json.loads(lines[-2]) == 3.0
-    assert json.loads(lines[-1]) is None
+    # no previous detail: nothing to compare, nothing flagged
+    assert no_prev == {}
 
 
 def test_bench_dict_literals_have_no_repeated_keys():

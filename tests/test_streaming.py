@@ -234,6 +234,32 @@ class TestStatefulEwmaAcrossBatches:
             assert got[u][1] == want[u][1], u
 
 
+    def test_regressed_event_time_raises(self, spark):
+        """A microbatch whose first event is older than the state's last
+        event must fail loudly, not fold out of order: the later half of
+        the history is fed first."""
+        import os
+        import tempfile
+
+        import pyarrow.parquet as pq
+
+        from aristoteles_spark.streaming.events import user_ewma_stateful
+
+        src = pq.read_table(f"{SF}/events.parquet").sort_by(
+            [("ts", "ascending"), ("event_id", "ascending")]
+        )
+        d = tempfile.mkdtemp(prefix="ewma_regressed_")
+        n = src.num_rows
+        for i, (lo, hi) in enumerate([(n // 2, n), (0, n // 2)]):
+            pq.write_table(src.slice(lo, hi - lo), os.path.join(d, f"part-{i}.parquet"))
+            os.utime(os.path.join(d, f"part-{i}.parquet"), (1000 + i, 1000 + i))
+
+        with pytest.raises(Exception, match="event time regressed across microbatches"):
+            run_available_now(
+                user_ewma_stateful(_stream(spark, d)), "mb_ewma_regressed", "append"
+            )
+
+
 class TestLeftOuterFlush:
     def test_unmatched_clicks_emit_nulls_and_cover_all_clicks(self, spark):
         """Every click must appear (matched or null-extended) once the

@@ -5,8 +5,9 @@ Times a list of declared queries under two repo trees (e.g. the commit
 that produced the previous BENCH_DETAIL vs HEAD) in ALTERNATING fresh
 subprocess sessions (A B B A ... — the mirrored order cancels linear
 host drift), N timed passes per session after a warmup pass, min per
-query per session. Each session also runs the bench calibration probes
-so host movement during the A/B itself is visible in the record.
+query per session. Each session also runs two host probes of its own (a
+pure-CPU codegen job and 24 tiny jobs) so host movement during the A/B
+itself is visible in the record.
 
 Usage:
     python tools/ab_bench.py TREE_A TREE_B q1,q2,... [sessions_per_tree]
@@ -14,9 +15,9 @@ Usage:
 Prints a per-query comparison table and writes the full record to
 AB_BENCH.json in the current directory. Interpretation contract (the
 round-5/6 discipline): trees equal within noise => the BENCH_DETAIL
-drift was suite context or probe-invisible host steal, record it in
-bench.py REGRESSION_NOTES with these numbers; tree B consistently
-slower => a real code regression, bisect it.
+drift was suite context or probe-invisible host steal, record these
+numbers in CHANGES.md; tree B consistently slower => a real code
+regression, bisect it.
 """
 
 from __future__ import annotations

@@ -1,12 +1,13 @@
 """Capture .explain("formatted") output for declared queries (guide §1).
 
-Writes plans/<round>/<query>_<suffix>.txt for each named query. Runs with
-SPARK_GRAFT_AUDIT_NO_BARRIER=1 so localCheckpoint barriers and session
+Writes plans/<query>_<suffix>.txt for each named query; plans/ is not
+committed, the executed-plan hash in BENCH_DETAIL.json is the record. Runs
+with SPARK_GRAFT_AUDIT_NO_BARRIER=1 so localCheckpoint barriers and session
 shared-table memos are bypassed and the FULL strategy plan (every
 Exchange / join / scan the computation would run) is visible — the same
 regime tools/plan_audit.py asserts on.
 
-Usage: python tools/capture_plans.py [--out plans/r09] [--suffix before] q1 [q2 ...]
+Usage: python tools/capture_plans.py [--out plans/] [--suffix before] q1 [q2 ...]
 """
 
 from __future__ import annotations
@@ -22,7 +23,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> None:
-    out_dir = "plans/r09"
+    out_dir = "plans/"
     suffix = "before"
     names = []
     args = iter(sys.argv[1:])

@@ -764,15 +764,6 @@ def _partition_pruning_section(spark, failures: list) -> str:
     )
 
 
-def _total_input_bytes(spark) -> int:
-    store = spark._jsparkSession.sparkContext().statusStore()
-    gw = spark._sc._gateway
-    empty = gw.jvm.java.util.ArrayList()
-    quantiles = gw.new_array(gw.jvm.double, 0)
-    lst = store.stageList(empty, False, False, quantiles, empty)
-    return sum(lst.apply(i).inputBytes() for i in range(lst.size()))
-
-
 def _data_skipping_section(spark, failures: list) -> str:
     """Evidence that value-clustering the file layout (sort by the filter
     column at write time) lets parquet row-group min/max statistics skip
