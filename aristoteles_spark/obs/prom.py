@@ -24,6 +24,7 @@ _DECLARED = {
     "status": ("exit status of the run", "gauge"),
     "report_time": ("unix time of metric flush", "gauge"),
     "rows_written": ("rows written this run", "gauge"),
+    "stage_seconds": ("wall seconds of a run stage (probe, read, write, publish)", "gauge"),
 }
 
 

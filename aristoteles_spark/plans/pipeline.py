@@ -3,13 +3,20 @@
 Orchestration mirrors reference aristoteles/aristoteles.py:148-485. A run
 reads the watermark, gates on the target day's completeness, then:
 
-    read_stations over the whole pending span (range pushed to SQLite)
+    read_stations over the whole pending span (range pushed to SQLite;
+    every station in one driver-side Arrow table, one LocalTableScan)
       -> convert_dataframe (Catalyst when/otherwise, codegen'd)
+      -> one projection: NULL -> NaN and the UTC ``date`` column
       -> ONE write of every pending day into a hidden staging directory,
-         partitioned by date (one file per day, NaN for NULL)
+         partitioned by date (one file per day)
       -> publish on the driver, day by day in order: lock, swap the
          staged partition in (sinks/compact.swap_partition), sidecar,
          unlock, advance the watermark
+
+Each run exports its wall seconds per stage (``probe``: the min and gate
+SQLite probes, ``read``, ``write``: convert plus the staging job,
+``publish``) as ``aristoteles_stage_seconds`` in the Prometheus textfile,
+on a crash too.
 
 Deliberately batch-incremental, NOT Structured Streaming: emission is
 completeness-*triggered* (hold a day until every station has 288 samples),
@@ -25,10 +32,12 @@ from __future__ import annotations
 import datetime as dt
 import os
 import shutil
+import time
 from collections import Counter
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
-from pyspark.sql import Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from aristoteles_spark.functions.units import convert_dataframe
@@ -68,6 +77,16 @@ class RunResult:
     incomplete_stations: list[str] = field(default_factory=list)
 
 
+@contextmanager
+def _timed(stages: dict[str, float], stage: str):
+    """Add the block's wall seconds to ``stages[stage]``, also when it raises."""
+    t0 = time.perf_counter()
+    try:
+        yield
+    finally:
+        stages[stage] += time.perf_counter() - t0
+
+
 def run(
     spark: SparkSession,
     conf: PipelineConfig,
@@ -78,13 +97,15 @@ def run(
     """One incremental run: catch up every unwritten complete day."""
     prom = PromBuffer()
     result = RunResult(status=0)
+    stages = dict.fromkeys(("probe", "read", "write", "publish"), 0.0)
     try:
         recover_compaction(conf.archive)  # leftovers of an interrupted run
         db_paths = {n: sc["db_path"] for n, sc in conf.stations.items()}
 
         # earliest data across stations (reference SQL #1 + driver fold,
         # aristoteles.py:240-254)
-        mins = [m for m in (min_datetime(p) for p in db_paths.values()) if m is not None]
+        with _timed(stages, "probe"):
+            mins = [m for m in (min_datetime(p) for p in db_paths.values()) if m is not None]
         if not mins:
             result.status = 1
             return result
@@ -102,7 +123,8 @@ def run(
         # completeness gate on the TARGET day across all stations
         # (reference aristoteles.py:296-327)
         lo, hi = D.day_bounds(target)
-        counts = {n: ranged_count(p, lo, hi) for n, p in db_paths.items()}
+        with _timed(stages, "probe"):
+            counts = {n: ranged_count(p, lo, hi) for n, p in db_paths.items()}
         for n, c in counts.items():
             prom.add("samples_yesterday", c, {"station": n})
         incomplete = D.gate_complete(counts, conf.expected_samples)
@@ -112,17 +134,21 @@ def run(
 
         staging = staging_dir(conf.archive)
         try:
-            rows = _stage_days(spark, conf, db_paths, first_day, target, staging)
-            for day in D.span_range(first_day, target):
-                published = _publish_day(conf, staging, day)
-                # crash-safe: advance the watermark only after the day's commit
-                S.write_state(conf.state_path, day)
-                # a day counts for the run that advanced the watermark past it
-                if published:
-                    result.days_written += 1
-                    result.rows_written += rows[day]
-                else:  # skip-day path (reference aristoteles.py:348-370)
-                    result.skipped_days.append(day)
+            with _timed(stages, "read"):  # the pending span: first_day through target
+                raw = read_stations(spark, db_paths, D.day_bounds(first_day)[0], hi)
+            with _timed(stages, "write"):
+                rows = _stage_days(spark, conf, raw, first_day, target, staging)
+            with _timed(stages, "publish"):
+                for day in D.span_range(first_day, target):
+                    published = _publish_day(conf, staging, day)
+                    # crash-safe: advance the watermark only after the day's commit
+                    S.write_state(conf.state_path, day)
+                    # a day counts for the run that advanced the watermark past it
+                    if published:
+                        result.days_written += 1
+                        result.rows_written += rows[day]
+                    else:  # skip-day path (reference aristoteles.py:348-370)
+                        result.skipped_days.append(day)
         finally:
             shutil.rmtree(staging, ignore_errors=True)
             prom.add("days_written", result.days_written)
@@ -132,32 +158,34 @@ def run(
         result.status = 1
         raise
     finally:
+        for stage, seconds in stages.items():
+            prom.add("stage_seconds", seconds, {"stage": stage})
         prom.flush(conf.netfc_path, result.status)
 
 
 def _stage_days(
     spark: SparkSession,
     conf: PipelineConfig,
-    db_paths: dict[str, str],
+    raw: DataFrame,
     first: dt.date,
     last: dt.date,
     staging: str,
 ) -> dict[dt.date, int]:
-    """Write every day of ``[first, last]`` in ONE job to ``staging``,
-    partitioned by ``date`` with one file per day; a day without rows
-    gets no partition. Returns rows per day, counted by an Observation
-    on the write job itself (no second pass over the data)."""
-    lo, _ = D.day_bounds(first)
-    _, hi = D.day_bounds(last)
-    df = convert_dataframe(read_stations(spark, db_paths, lo, hi), strict=conf.strict_units)
-    # the reference's NULL -> NaN (np.asarray(..., dtype=float), aristoteles.py:346)
+    """Convert ``raw`` (every station over ``[first, last]``) and write it
+    in ONE job to ``staging``, partitioned by ``date`` with one file per
+    day; a day without rows gets no partition. Returns rows per day,
+    counted by an Observation on the write job itself (no second pass
+    over the data)."""
+    df = convert_dataframe(raw, strict=conf.strict_units)
+    # one projection: the reference's NULL -> NaN (np.asarray(...,
+    # dtype=float), aristoteles.py:346) and the UTC day by integer
+    # arithmetic, independent of the session time zone
     nan = F.lit(float("nan"))
-    df = df.select(
-        *[F.coalesce(c, nan).alias(c) if t == "double" else c for c, t in df.dtypes]
-    )
-    # UTC day by integer arithmetic: independent of the session time zone
     out = (
-        df.withColumn("date", F.date_from_unix_date(F.floor(F.col("dateTime") / 86400).cast("int")))
+        df.select(
+            *[F.coalesce(c, nan).alias(c) if t == "double" else c for c, t in df.dtypes],
+            F.date_from_unix_date(F.floor(F.col("dateTime") / 86400).cast("int")).alias("date"),
+        )
         .repartition("date")
         .sortWithinPartitions("date", "station", "dateTime")
     )

@@ -9,14 +9,17 @@ statements (reference: aristoteles/aristoteles.py:229-241,303-306,339-346):
       ORDER BY dateTime                                         (extract)
 
 Design decision (SURVEY.md §4): the pipeline (plans/pipeline.py) ingests
-through this module's driver-side ``sqlite3`` -> Arrow -> ``createDataFrame``
-reader, one ranged read per station for the whole pending span. A station
-produces 288 rows a day, so a 180-day backfill of three stations is
-155,520 rows, well within one driver read; SQLite's own index on
-``dateTime`` gives pushdown for the scalar probes and the range. The
-``wview`` Python Data Source (``sources/wview_datasource.py``) is the
-library's executor-parallel reader for reads too large for the driver;
-the pipeline does not use it.
+through this module's driver-side reader: ``sqlite3`` rows -> one Arrow
+table per station, ``station`` column added in Arrow, all stations
+concatenated into ONE ``pa.Table`` handed straight to
+``createDataFrame(pa.Table, schema=...)`` — one ``LocalTableScan``, no
+pandas, no per-station scans or unions. One ranged read per station
+covers the whole pending span. A station produces 288 rows a day, so a
+180-day backfill of three stations is 155,520 rows, well within one
+driver read; SQLite's own index on ``dateTime`` gives pushdown for the
+scalar probes and the range. The ``wview`` Python Data Source
+(``sources/wview_datasource.py``) is the library's executor-parallel
+reader for reads too large for the driver; the pipeline does not use it.
 
 Pushdown policy: the scalar probes (#1, #2) are answered by SQLite directly
 — shipping whole tables to Spark to compute a MIN or COUNT would invert the
@@ -32,11 +35,15 @@ from typing import Iterable
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from aristoteles_spark.schema import ARCHIVE_COLUMNS, ARCHIVE_SCHEMA, MEASURES
 
 _SELECT_LIST = ", ".join(ARCHIVE_COLUMNS)
+
+_STATIONS_SCHEMA = T.StructType(
+    [T.StructField("station", T.StringType(), False), *ARCHIVE_SCHEMA.fields]
+)
 
 
 def _arrow_from_rows(rows: list[tuple]) -> pa.Table:
@@ -48,18 +55,9 @@ def _arrow_from_rows(rows: list[tuple]) -> pa.Table:
     return pa.table(dict(zip(ARCHIVE_COLUMNS, arrays)))
 
 
-def read_archive(
-    spark: SparkSession,
-    db_path: str,
-    lo: int | None = None,
-    hi: int | None = None,
-) -> DataFrame:
-    """Load (a time range of) one station's ``archive`` as a DataFrame.
-
-    ``lo``/``hi`` are inclusive epoch-second bounds pushed down into SQLite
-    (mirrors reference SQL #3, aristoteles.py:340-345, including inclusive
-    BETWEEN semantics).
-    """
+def _fetch(db_path: str, lo: int | None, hi: int | None) -> pa.Table:
+    """Reference SQL #3 (aristoteles.py:340-345) as an Arrow table, with
+    the inclusive BETWEEN range pushed into SQLite."""
     where, params = "", ()
     if lo is not None or hi is not None:
         where = " WHERE dateTime BETWEEN ? AND ?"
@@ -68,7 +66,20 @@ def read_archive(
         rows = conn.execute(
             f"SELECT {_SELECT_LIST} FROM archive{where} ORDER BY dateTime", params
         ).fetchall()
-    return spark.createDataFrame(_arrow_from_rows(rows).to_pandas(), schema=ARCHIVE_SCHEMA)
+    return _arrow_from_rows(rows)
+
+
+def read_archive(
+    spark: SparkSession,
+    db_path: str,
+    lo: int | None = None,
+    hi: int | None = None,
+) -> DataFrame:
+    """Load (a time range of) one station's ``archive`` as a DataFrame.
+
+    ``lo``/``hi`` are inclusive epoch-second bounds pushed down into SQLite.
+    """
+    return spark.createDataFrame(_fetch(db_path, lo, hi), schema=ARCHIVE_SCHEMA)
 
 
 def min_datetime(db_path: str) -> int | None:
@@ -97,20 +108,19 @@ def read_stations(
     lo: int | None = None,
     hi: int | None = None,
 ) -> DataFrame:
-    """Union all stations into the engine's canonical long form.
+    """All stations in the engine's canonical long form, one scan.
 
     Adds a ``station`` column (the reference's per-station HDF5 group name,
-    aristoteles.py:408-440). unionByName of per-station frames — narrow, no
-    shuffle; downstream partitioning is by (day) at the sink.
+    aristoteles.py:408-440) in Arrow, then concatenates the stations into
+    one table: a single ``LocalTableScan``, no union; downstream
+    partitioning is by (day) at the sink.
     """
-    dfs = [
-        read_archive(spark, path, lo, hi).withColumn("station", F.lit(name))
-        for name, path in stations.items()
-    ]
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d)
-    return out.select("station", *ARCHIVE_COLUMNS)
+    tables = []
+    for name, path in stations.items():
+        t = _fetch(path, lo, hi)
+        tables.append(t.add_column(0, "station", pa.array([name] * t.num_rows, pa.string())))
+    table = pa.concat_tables(tables).combine_chunks()
+    return spark.createDataFrame(table, schema=_STATIONS_SCHEMA)
 
 
 def write_archive_sqlite(db_path: str, rows: Iterable[tuple]) -> None:

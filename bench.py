@@ -26,10 +26,6 @@ import os
 import sys
 import time
 
-# the suite materializes every query's persisted/checkpointed frames twice
-# (warmup + timed); give the single-JVM driver enough storage memory that
-# the timed pass never evicts/spills warm caches (machine has 128 GiB)
-os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
 # no periodic forced GC during the run: a full GC + blocking ContextCleaner
 # block removals landing inside a timed query added ~50 s to it (measured
 # on dd7). One explicit GC runs between the warmup and timed passes instead.
@@ -41,7 +37,12 @@ sys.path.insert(0, ROOT)
 import __spark_entry__ as entrymod
 from aristoteles_spark.obs.profile import profile
 from aristoteles_spark.operators.materialize import BUILD_LOG
-from aristoteles_spark.session import get_spark
+from aristoteles_spark.session import get_spark, host_driver_mem
+
+# the suite materializes every query's persisted/checkpointed frames twice
+# (warmup + timed); give the single-JVM driver enough storage memory that
+# the timed pass never evicts/spills warm caches
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", host_driver_mem())
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 

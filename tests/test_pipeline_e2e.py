@@ -9,6 +9,7 @@ import datetime as dt
 import json
 import math
 import os
+import re
 
 import pytest
 
@@ -60,6 +61,10 @@ def test_happy_path_complete_days(spark, tmp_path, station_db):
     prom = (tmp_path / "aristoteles.prom").read_text()
     assert "aristoteles_days_written 2" in prom
     assert 'aristoteles_samples_yesterday{station="s1"} 288' in prom
+    # one wall-seconds gauge per run stage
+    stages = dict(re.findall(r'^aristoteles_stage_seconds\{stage="(\w+)"\} (\S+)$', prom, re.M))
+    assert sorted(stages) == ["probe", "publish", "read", "write"]
+    assert all(float(v) >= 0 for v in stages.values())
 
 
 def test_gate_defers_backlog(spark, tmp_path, station_db):
@@ -176,6 +181,29 @@ def test_one_day_run_starts_only_its_write_jobs(spark, tmp_path, station_db):
     assert len(sc.statusTracker().getJobIdsForGroup("one_day_run")) <= 2
 
 
+def test_one_day_run_tasks_bounded_by_parallelism(spark, tmp_path, station_db):
+    """Three stations' day is one scan of one Arrow table: the run's tasks
+    do not grow with the station count (a scan per station would start
+    3 x defaultParallelism tasks in its scan stage alone)."""
+    conf = make_conf(tmp_path, station_db, {s: day_rows(DAY1) for s in ("s1", "s2", "s3")})
+    sc = spark.sparkContext
+    sc.setJobGroup("three_station_day", "three_station_day")
+    try:
+        assert run(spark, conf, today=DAY2).rows_written == 3 * 288
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    stages = {
+        s
+        for j in tracker.getJobIdsForGroup("three_station_day")
+        for s in tracker.getJobInfo(j).stageIds
+    }
+    # tasks that ran: the write job's copy of the shuffle map stage is skipped
+    tasks = sum(tracker.getStageInfo(s).numCompletedTasks for s in stages)
+    assert tasks <= 2 * sc.defaultParallelism, tasks
+
+
 # ------------------------------------------------------- fault injection
 
 BACKLOG = {s: day_rows(DAY1) + day_rows(DAY3) for s in ("s1", "s2")}  # DAY2: skip day
@@ -234,6 +262,8 @@ def test_crash_after_kth_day_then_rerun_matches_uninterrupted(
     # the watermark stands at the last committed or skipped day
     assert S.read_state(conf.state_path) == (advanced[-1] + dt.timedelta(days=1) if advanced else None)
     _, _, crashed_prom = _outcome(spark, conf)  # counts what the crashed run committed
+    with open(os.path.join(conf.netfc_path, "aristoteles.prom")) as f:
+        assert sum(line.startswith("aristoteles_stage_seconds{") for line in f) == 4
 
     run(spark, conf, today=DAY4)
     rows, state, prom = _outcome(spark, conf)

@@ -1,4 +1,4 @@
-"""SQLite source: scan, pushdown probes, BETWEEN inclusivity, union."""
+"""SQLite source: scan, pushdown probes, BETWEEN inclusivity, all-station read."""
 
 import datetime as dt
 
@@ -53,6 +53,20 @@ def test_read_stations_union(spark, station_db):
     assert df.count() == 7
     counts = {r["station"]: r["n"] for r in df.groupBy("station").count().withColumnRenamed("count", "n").collect()}
     assert counts == {"a": 3, "b": 4}
+
+
+def test_read_stations_is_one_local_scan(spark, station_db):
+    """Every station lands in one driver-side Arrow table: the executed
+    plan is a single LocalTableScan, no per-station scans and no Union."""
+    paths = {n: station_db(n, day_rows(DAY, n=5 + i, base=10.0 * i)) for i, n in enumerate("abc")}
+    df = read_stations(spark, paths)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("LocalTableScan") == 1 and "Union" not in plan, plan
+    want = sorted(
+        (n, *r) for n, p in paths.items() for r in read_archive(spark, p).collect()
+    )
+    assert sorted(tuple(r) for r in df.collect()) == want
+    assert df.columns[0] == "station"
 
 
 def test_empty_archive(spark, station_db):

@@ -27,6 +27,10 @@ import os
 import subprocess
 import sys
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from aristoteles_spark.session import host_driver_mem  # noqa: E402
+
 _RUNNER = r"""
 import json, os, sys, time
 tree = sys.argv[1]
@@ -75,7 +79,7 @@ def run_session(tree: str, names: list[str], passes: int) -> dict:
     env = dict(os.environ)
     # match bench.py's session shape so numbers are comparable to
     # BENCH_DETAIL (no periodic GC, big driver)
-    env.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
+    env.setdefault("SPARK_GRAFT_DRIVER_MEM", host_driver_mem())
     env.setdefault("SPARK_GRAFT_PERIODIC_GC", "12h")
     p = subprocess.run(
         [sys.executable, "-c", _RUNNER, tree, ",".join(names), str(passes)],

@@ -404,10 +404,11 @@ def main() -> int:
     big = generate(force=args.regen)
     print(f"scaled data at {big}")
 
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
-    os.environ.setdefault("SPARK_GRAFT_PERIODIC_GC", "12h")
     import __spark_entry__ as entrymod
-    from aristoteles_spark.session import get_spark
+    from aristoteles_spark.session import get_spark, host_driver_mem
+
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", host_driver_mem())
+    os.environ.setdefault("SPARK_GRAFT_PERIODIC_GC", "12h")
 
     spark = get_spark("scale_sweep")
     qs = entrymod.queries()
