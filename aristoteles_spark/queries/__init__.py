@@ -9,7 +9,8 @@ Determinism rules (so Spark and duckdb value-hashes agree exactly):
 - AVGs are computed as CAST(decimal_sum AS DOUBLE) / count — a single
   deterministic double division, no engine-rounding in play;
 - every computed column is aliased identically on both sides;
-- any LIMIT is preceded by a total ORDER BY on a unique key.
+- any LIMIT is preceded by a total ORDER BY on a unique key
+  (tests/test_oracle_limits.py fails on any tie at the cut).
 """
 
 from __future__ import annotations

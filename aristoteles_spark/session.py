@@ -52,9 +52,6 @@ def get_spark(
         # 0.173 s -> 0.035 s. Lost: the Python fragment in ANSI-error
         # query contexts. A static conf: fixed when the session is built.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        # Python Data Source API (sources/wview_datasource.py): allow
-        # pushFilters() to prune partitions/rows at planning time
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         # codegen class cache sized for a many-query session: the default
         # 100 entries thrash under hundreds of distinct queries — every
         # pass recompiles every WholeStageCodegen unit through Janino

@@ -13,8 +13,7 @@ round-trips through Spark.
 Daily files are tiny (<=288 rows/station); the parse is driver-side by
 design, like the reference's own single-writer model. Bulk backfills
 over many files should map the same parse over a file listing
-(``spark.createDataFrame(paths).mapInPandas`` or the wview source for
-the SQLite originals).
+(``spark.createDataFrame(paths).mapInPandas``).
 """
 
 from __future__ import annotations

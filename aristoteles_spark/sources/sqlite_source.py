@@ -1,4 +1,4 @@
-"""SQLite ``archive`` table -> Spark DataFrame, with pushdown helpers.
+"""SQLite ``archive`` tables -> one Spark DataFrame, with pushdown probes.
 
 The reference opens one SQLite DB per weather station and issues three SQL
 statements (reference: aristoteles/aristoteles.py:229-241,303-306,339-346):
@@ -17,15 +17,12 @@ pandas, no per-station scans or unions. One ranged read per station
 covers the whole pending span. A station produces 288 rows a day, so a
 180-day backfill of three stations is 155,520 rows, well within one
 driver read; SQLite's own index on ``dateTime`` gives pushdown for the
-scalar probes and the range. The ``wview`` Python Data Source
-(``sources/wview_datasource.py``) is the library's executor-parallel
-reader for reads too large for the driver; the pipeline does not use it.
+scalar probes and the range.
 
 Pushdown policy: the scalar probes (#1, #2) are answered by SQLite directly
 — shipping whole tables to Spark to compute a MIN or COUNT would invert the
-reference's own pushdown. The bulk extract (#3) optionally pushes the
-BETWEEN range into the SQLite query so only the needed days cross the
-boundary, mirroring predicate pushdown a DSv2 source would do.
+reference's own pushdown. The bulk extract (#3) pushes the BETWEEN range
+into the SQLite query so only the needed days cross the boundary.
 """
 
 from __future__ import annotations
@@ -55,31 +52,16 @@ def _arrow_from_rows(rows: list[tuple]) -> pa.Table:
     return pa.table(dict(zip(ARCHIVE_COLUMNS, arrays)))
 
 
-def _fetch(db_path: str, lo: int | None, hi: int | None) -> pa.Table:
+def _fetch(db_path: str, lo: int, hi: int) -> pa.Table:
     """Reference SQL #3 (aristoteles.py:340-345) as an Arrow table, with
     the inclusive BETWEEN range pushed into SQLite."""
-    where, params = "", ()
-    if lo is not None or hi is not None:
-        where = " WHERE dateTime BETWEEN ? AND ?"
-        params = (lo if lo is not None else -(2**62), hi if hi is not None else 2**62)
     with sqlite3.connect(db_path) as conn:
         rows = conn.execute(
-            f"SELECT {_SELECT_LIST} FROM archive{where} ORDER BY dateTime", params
+            f"SELECT {_SELECT_LIST} FROM archive WHERE dateTime BETWEEN ? AND ? "
+            "ORDER BY dateTime",
+            (lo, hi),
         ).fetchall()
     return _arrow_from_rows(rows)
-
-
-def read_archive(
-    spark: SparkSession,
-    db_path: str,
-    lo: int | None = None,
-    hi: int | None = None,
-) -> DataFrame:
-    """Load (a time range of) one station's ``archive`` as a DataFrame.
-
-    ``lo``/``hi`` are inclusive epoch-second bounds pushed down into SQLite.
-    """
-    return spark.createDataFrame(_fetch(db_path, lo, hi), schema=ARCHIVE_SCHEMA)
 
 
 def min_datetime(db_path: str) -> int | None:
@@ -103,12 +85,10 @@ def ranged_count(db_path: str, lo: int, hi: int) -> int:
 
 
 def read_stations(
-    spark: SparkSession,
-    stations: dict[str, str],
-    lo: int | None = None,
-    hi: int | None = None,
+    spark: SparkSession, stations: dict[str, str], lo: int, hi: int
 ) -> DataFrame:
-    """All stations in the engine's canonical long form, one scan.
+    """All stations' rows with ``lo <= dateTime <= hi`` (epoch seconds,
+    pushed down into SQLite) in the engine's canonical long form, one scan.
 
     Adds a ``station`` column (the reference's per-station HDF5 group name,
     aristoteles.py:408-440) in Arrow, then concatenates the stations into

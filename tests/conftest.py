@@ -50,8 +50,8 @@ def rows_canonical(cols: list[str], rows: list[tuple]) -> list[tuple]:
     return sorted(canon)
 
 
-def compare_spark_duckdb(spark, sf_dir: str, spark_df, sql: str) -> None:
-    """Assert a Spark result matches the duckdb oracle exactly (canonical)."""
+def oracle_con(sf_dir: str):
+    """A duckdb connection with one view per test table in ``sf_dir``."""
     import duckdb
 
     con = duckdb.connect()
@@ -62,7 +62,12 @@ def compare_spark_duckdb(spark, sf_dir: str, spark_df, sql: str) -> None:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-    oracle = con.execute(sql)
+    return con
+
+
+def compare_spark_duckdb(spark, sf_dir: str, spark_df, sql: str) -> None:
+    """Assert a Spark result matches the duckdb oracle exactly (canonical)."""
+    oracle = oracle_con(sf_dir).execute(sql)
     o_cols = [d[0] for d in oracle.description]
     o_rows = oracle.fetchall()
     s_rows = [tuple(r) for r in spark_df.collect()]

@@ -11,8 +11,7 @@ scalar per-cell conversion loop (aristoteles.py:339-476). It publishes no
 numbers (BASELINE.md), so the comparison target is structural: rows/s
 here vs a serial interpreter loop over the same rows.
 
-Rewrites the generated part of PIPELINE_BENCH.md (the text before its
-first ``## `` section). Usage: python tools/pipeline_bench.py [days]
+Rewrites PIPELINE_BENCH.md. Usage: python tools/pipeline_bench.py [days]
 """
 
 from __future__ import annotations
@@ -114,14 +113,8 @@ def main() -> None:
         "and publishes no throughput numbers (BASELINE.md).\n"
     )
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    path = os.path.join(repo, "PIPELINE_BENCH.md")
-    kept = ""
-    if os.path.exists(path):
-        with open(path) as f:
-            old = f.read()
-        kept = old[old.index("\n## "):] if "\n## " in old else ""
-    with open(path, "w") as f:
-        f.write(out + kept)
+    with open(os.path.join(repo, "PIPELINE_BENCH.md"), "w") as f:
+        f.write(out)
     print(out)
     shutil.rmtree(workdir, ignore_errors=True)
 
