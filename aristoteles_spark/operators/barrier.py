@@ -1,37 +1,58 @@
-"""Flag-aware stage barrier (the ``_finalize`` pattern, shared).
+"""Stage barrier that plan checks can switch off (the ``_finalize``
+pattern, shared).
 
 ``localCheckpoint`` is the production stage seam — materialize a compact
 intermediate ONCE instead of re-running its subtree per consumer — but
-it replaces the plan with a checkpoint scan, which blinds
-``tools/plan_audit.py``'s positive plan-pattern assertions and
-``tools/scale_sweep``'s exchange-stability check to everything upstream
-of the barrier (ADVICE r4: ir2's BroadcastHashJoin assertion was being
-satisfied by a different, post-barrier join). Every barrier — operator-
-level and query-level alike — must therefore route through this helper
-so ``SPARK_GRAFT_AUDIT_NO_BARRIER=1`` (set by tools/plan_audit.py and
-the scale sweep's plan pass) skips it and audits see the strategy plan
-the checkpoint materialization would actually run.
+it replaces the plan with a checkpoint scan, which blinds plan-pattern
+assertions (``tests/test_plans.py``) and ``tools/scale_sweep``'s
+exchange-stability check to everything upstream of the barrier (ADVICE
+r4: ir2's BroadcastHashJoin assertion was being satisfied by a
+different, post-barrier join). Every barrier — operator-level and
+query-level alike — must therefore route through this helper, so that
+inside ``no_barriers()`` it is skipped and an explain shows the strategy
+plan the checkpoint materialization would actually run.
 """
 
 from __future__ import annotations
 
-import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
+# caches handed to a skipped barrier; None outside no_barriers()
+_skipped: list[DataFrame] | None = None
+
 
 def barrier_disabled() -> bool:
-    return os.environ.get("SPARK_GRAFT_AUDIT_NO_BARRIER") == "1"
+    return _skipped is not None
+
+
+@contextmanager
+def no_barriers() -> Iterator[None]:
+    """Build plans to explain, not to run: inside the block every
+    ``audit_barrier`` returns its frame unchanged and
+    ``materialize.shared_table`` builds without memoizing. On exit the
+    caches the skipped barriers would have released (dd12's and sim6's
+    persisted samples, for example) are unpersisted."""
+    global _skipped
+    outer, _skipped = _skipped, []
+    try:
+        yield
+    finally:
+        skipped, _skipped = _skipped, outer
+        for c in skipped:
+            c.unpersist()
 
 
 def audit_barrier(
     df: DataFrame, *caches: DataFrame, eager: bool = True
 ) -> DataFrame:
     """``df.localCheckpoint(eager)`` then unpersist ``caches`` — unless
-    the plan audit's ``SPARK_GRAFT_AUDIT_NO_BARRIER=1`` is set, in which
-    case ``df`` is returned unchanged (caches are left alone too: the
-    audit only explains plans, it does not execute them)."""
-    if barrier_disabled():
+    inside ``no_barriers()``, where ``df`` is returned unchanged and
+    ``caches`` are released when the block exits."""
+    if _skipped is not None:
+        _skipped.extend(caches)
         return df
     out = df.localCheckpoint(eager=eager)
     for c in caches:

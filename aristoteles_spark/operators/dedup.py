@@ -53,10 +53,10 @@ def _finalize(result: DataFrame, *cached: DataFrame) -> DataFrame:
     pipeline places at this seam anyway: write the pair/edge table
     between stages, then drop the inputs.
 
-    SPARK_GRAFT_AUDIT_NO_BARRIER=1 (tools/plan_audit.py) skips the
-    barrier so explain() still shows the strategy plan — the exact plan
+    ``no_barriers()`` (tests/test_plans.py) skips the barrier so
+    explain() still shows the strategy plan — the exact plan
     the checkpoint materialization runs — instead of a checkpoint scan
-    (shared flag-aware helper: operators/barrier.py)."""
+    (shared helper: operators/barrier.py)."""
     from aristoteles_spark.operators.barrier import audit_barrier
 
     return audit_barrier(result, *cached)

@@ -15,8 +15,8 @@ key). The checkpoint is the stage seam a pipeline's table write would
 be; the memo dict holding the DataFrame reference keeps its RDD blocks
 alive across the bench runner's explicit GCs.
 
-Plan-audit interplay: when ``SPARK_GRAFT_AUDIT_NO_BARRIER=1`` is set
-(tools/plan_audit.py, the scale sweep's plan pass) the cache is
+Plan-check interplay: inside ``barrier.no_barriers()``
+(tests/test_plans.py, the scale sweep's plan pass) the cache is
 bypassed entirely — the builder's full strategy plan stays visible, and
 nothing is checkpointed or memoized (audits only explain; they must not
 poison the cache with un-checkpointed frames either).

@@ -871,8 +871,9 @@ def q_lsh_quality(spark, sf_dir):
     """dd12 — LSH quality census (see _lsh_quality_plan). Materializes
     the 1-row result eagerly (localCheckpoint), then releases the
     evaluation-sample cache so it cannot leak into a 220-query session
-    (gr4's pattern). plan_audit explains _lsh_quality_plan's frame —
-    the pre-checkpoint plan with the audit-worthy operators."""
+    (gr4's pattern). Under ``no_barriers()`` the frame returned is
+    _lsh_quality_plan's pre-checkpoint plan, which tests/test_plans.py
+    checks."""
     out, sample_docs = _lsh_quality_plan(spark, sf_dir)
     from aristoteles_spark.operators.barrier import audit_barrier
 

@@ -16,7 +16,8 @@ Scale notes: CSV/JSON are INGEST formats (no row-group skipping — the
 module docstring of sources/files.py); the aggregates here follow the
 same decimal-exact rules as every other query. The bucketed-join query
 writes both sides bucketed+sorted by the join key so the join itself
-plans exchange-free (PLANS.md carries the no-Exchange evidence).
+plans exchange-free (tests/test_formats.py pins no Exchange below the
+join).
 """
 
 from __future__ import annotations

@@ -502,8 +502,9 @@ def q_ann_recall(spark, sf_dir):
     """sim6 — ANN recall census (see _ann_recall_plan). Materializes the
     <=50-row result eagerly (localCheckpoint), then releases the query
     sample cache so it cannot leak into a 220-query session (gr4's
-    pattern). plan_audit explains _ann_recall_plan's frame — the
-    pre-checkpoint plan with the audit-worthy operators."""
+    pattern). Under ``no_barriers()`` the frame returned is
+    _ann_recall_plan's pre-checkpoint plan, which tests/test_plans.py
+    checks."""
     out, q = _ann_recall_plan(spark, sf_dir)
     return audit_barrier(out, q)
 

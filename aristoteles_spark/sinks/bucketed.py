@@ -8,8 +8,8 @@ prove via the HashClusteredDistribution the bucketed scan reports.
 
 Beyond the reference inventory (the reference's single SQLite source,
 aristoteles/aristoteles.py:318-343, needs no joins); this is the §7.4
-scale-path layout for the training-data tables. tools/plan_audit.py writes
-the exchange-free plan into PLANS.md as evidence.
+scale-path layout for the training-data tables. tests/test_bucketing.py and
+tests/test_formats.py pin the exchange-free join plan.
 
 Bucket count guidance at scale: total_size / bucket_count ≈ 128-512 MB per
 bucket-file per partition; both sides MUST use the same count (Spark only

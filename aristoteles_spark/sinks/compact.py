@@ -5,8 +5,9 @@ appends) fragment a table into many small files; at 100 TB the file-open
 and listing overhead dominates scans long before the bytes do. Compaction
 rewrites each partition's fragments into few right-sized files and
 re-sorts rows within files on the clustering columns so parquet row-group
-min/max statistics stay tight (the data-skipping property PLANS.md
-documents).
+min/max statistics stay tight (data skipping;
+tests/test_formats.py::TestCompaction checks each file comes out
+sorted).
 
 Crash safety: the compacted copy is written to a sibling staging
 directory first, and source partitions are swapped only after the whole
@@ -163,7 +164,10 @@ def compact_partitions(
         df = df.where(where)
     out = df.repartition(*[F.col(c) for c in partition_cols])
     if cluster_cols:
-        out = out.sortWithinPartitions(*cluster_cols)
+        # partition columns lead: the partitioned writer sorts each task
+        # by them, and Catalyst drops a sort on the cluster columns alone
+        # beneath that one
+        out = out.sortWithinPartitions(*partition_cols, *cluster_cols)
 
     staging = staging_dir(path)
     try:

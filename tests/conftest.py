@@ -21,7 +21,7 @@ SF_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_DIR", "/root/testdata/sf0.01")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("aristoteles_spark_tests", cpus=8)
+    s = get_spark("aristoteles_spark_tests")
     yield s
 
 

@@ -173,6 +173,7 @@ class TestCompaction:
     def test_compacts_fragments_and_preserves_data(self, spark, tmp_path):
         import glob
 
+        import pyarrow.parquet as pq
         from pyspark.sql import functions as F
 
         from aristoteles_spark.sinks.compact import compact_partitions
@@ -199,6 +200,11 @@ class TestCompaction:
             "event_type"
         ).distinct().count()
         assert after == before
+        # clustered on ts: each file's row groups carry tight min/max
+        # stats for a ts range predicate to skip on
+        for f in after_files:
+            ts = pq.read_table(f, columns=["ts"]).column("ts").to_pylist()
+            assert ts == sorted(ts), f
 
     def test_where_limits_rewrite_scope(self, spark, tmp_path):
         import glob

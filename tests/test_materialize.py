@@ -28,7 +28,6 @@ def _build(seconds: float):
 
 
 def test_build_log_is_session_scoped(monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_AUDIT_NO_BARRIER", raising=False)
     log: dict[str, float] = {}
     monkeypatch.setattr(materialize, "_CACHE", {})
     monkeypatch.setattr(materialize, "BUILD_LOG", log)

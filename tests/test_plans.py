@@ -1,23 +1,25 @@
-"""Physical-plan audit: renders .explain('formatted') for headline queries
-and asserts the plan properties the 100 TB design depends on.
+"""Physical-plan properties the design depends on: pushed filters, pruned
+scans, map-side partial aggregates, broadcasts, partial top-k and no
+Python in the hot path.
 
-Writes PLANS.md (judge-facing evidence) and exits nonzero if an expected
-property is missing — run after plan-affecting changes.
-
-Usage: python tools/plan_audit.py
+Each declared query below is built at sf0.001 inside
+``operators.barrier.no_barriers()``, so localCheckpoint barriers and the
+shared-table memo stay inline and the explained plan is the strategy
+plan a barrier would materialize. Only ``explain("formatted")`` runs;
+nothing is collected. A ``!``-prefixed pattern is a property that must
+be absent (e.g. zero-shuffle claims assert the absence of any
+Exchange).
 """
 
 from __future__ import annotations
 
 import io
-import os
 import re
-import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import pytest
 
-SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_DIR", "/root/testdata/sf0.01")
+from tests.conftest import SF_SMOKE
 
 # query -> [(regex, why it must appear)]
 EXPECTATIONS: dict[str, list[tuple[str, str]]] = {
@@ -134,7 +136,7 @@ EXPECTATIONS: dict[str, list[tuple[str, str]]] = {
     "ml1_linear_trend": [
         (r"(?s)HashAggregate.*Exchange.*HashAggregate",
          "sufficient statistics partial-aggregate map-side — 5 longs per group shuffle"),
-        (r"!PythonUDF", "closed-form fit is pure codegen"),
+        (r"!EvalPython", "closed-form fit is pure codegen"),
     ],
     "dq2_gap_report": [
         (r"(?s)HashAggregate.*Window.*Exchange",
@@ -197,7 +199,7 @@ EXPECTATIONS: dict[str, list[tuple[str, str]]] = {
          "no hash shuffle anywhere — the gram stream never crosses the network"),
         (r"!Generate",
          "no explode: grams build, sort, fold and filter entirely in-row"),
-        (r"!PythonUDF",
+        (r"!EvalPython",
          "gram construction, run folds and coverage are engine expressions"),
     ],
     "xm1_index_compaction": [
@@ -350,7 +352,7 @@ EXPECTATIONS: dict[str, list[tuple[str, str]]] = {
     # exchange; the zero-shuffle claim is the absence of HASH shuffles
     "ar2_vector_quantize": [
         (r"!hashpartitioning", "quantization is row-local — no hash shuffle anywhere in the plan"),
-        (r"!PythonUDF|ArrowEval", "pure codegen array expressions — no Python in the hot path"),
+        (r"!EvalPython", "pure codegen array expressions — no Python in the hot path"),
     ],
     "ar3_random_projection": [
         (r"!hashpartitioning", "projection sketch is row-local — no hash shuffle anywhere in the plan"),
@@ -372,11 +374,11 @@ EXPECTATIONS: dict[str, list[tuple[str, str]]] = {
     ],
     "tx12_pii_redaction": [
         (r"!hashpartitioning", "redaction is row-local regexp codegen — no hash shuffle anywhere"),
-        (r"!PythonUDF", "no Python in the hot path"),
+        (r"!EvalPython", "no Python in the hot path"),
     ],
     "px1_perplexity_filter": [
         (r"(?s)HashAggregate.*Exchange.*HashAggregate", "LM count tables partial-aggregated before their shuffles"),
-        (r"!PythonUDF", "scoring is pure codegen (divisions + in-row fold), no Python"),
+        (r"!EvalPython", "scoring is pure codegen (divisions + in-row fold), no Python"),
     ],
     "cd1_snapshot_diff": [
         (r"(SortMergeJoin|ShuffledHashJoin) FullOuter", "snapshot diff is a keyed full-outer join — only (key, digest) shuffles, never text"),
@@ -384,7 +386,7 @@ EXPECTATIONS: dict[str, list[tuple[str, str]]] = {
     ],
     "cd2_content_manifest": [
         (r"(?s)HashAggregate.*Exchange.*HashAggregate", "commutative hash-sum manifest partial-aggregated before its shuffle"),
-        (r"!PythonUDF", "row hashing is codegen md5/conv — no Python"),
+        (r"!EvalPython", "row hashing is codegen md5/conv — no Python"),
     ],
     "nv1_ngram_novelty": [
         (r"(?s)HashAggregate.*Exchange.*HashAggregate", "gram frequencies partial-aggregated before the gram shuffle"),
@@ -406,32 +408,32 @@ EXPECTATIONS: dict[str, list[tuple[str, str]]] = {
         (r"BroadcastNestedLoopJoin", "one-row corpus stats (N, sum_dl, per-term df) broadcast back — documents never shuffle for scoring"),
         (r"WindowGroupLimit", "per-query top-k is a partial (map-side) rank — only ~k rows per scan partition reach the exchange"),
         (r"!\(\d+\) Generate[^\n]*explode\(split", "tf comes from in-row size(filter(...)), not a token explode — no (doc,token) shuffle exists"),
-        (r"!PythonUDF", "BM25 scoring is pure codegen"),
+        (r"!EvalPython", "BM25 scoring is pure codegen"),
     ],
     "ir2_hybrid_rrf": [
         (r"BroadcastHashJoin", "query vocabulary broadcast — token stream pruned before the (doc,token) aggregation"),
         (r"WindowGroupLimit", "both legs take partial top-k before their single exchange"),
         (r"BroadcastNestedLoopJoin", "vector-leg query side broadcast; corpus embeddings never shuffled in full"),
-        (r"!PythonUDF", "BM25, cosine, and RRF fusion are all pure codegen"),
+        (r"!EvalPython", "BM25, cosine, and RRF fusion are all pure codegen"),
     ],
     "hx1_html_extract": [
         (r"!Exchange hashpartitioning", "page build + extraction is per-row codegen — the only exchanges are the explicit fan_out and the output ordering"),
         (r"!\(\d+\) Window", "no ranking/window anywhere — scan-speed pipeline"),
-        (r"!PythonUDF", "the whole extractor is regexp/replace codegen"),
+        (r"!EvalPython", "the whole extractor is regexp/replace codegen"),
     ],
     "km2_kmeans_lloyd": [
         (r"BroadcastNestedLoopJoin", "centroids attach as ONE broadcast array-of-structs row — assignment is zero-shuffle in-row argmin"),
         (r"(?s)HashAggregate.*Exchange.*HashAggregate", "the (k x dim) centroid update partial-aggregates map-side before its tiny exchange"),
-        (r"!PythonUDF", "quantize, distance folds, argmin, floor-mean are all codegen"),
+        (r"!EvalPython", "quantize, distance folds, argmin, floor-mean are all codegen"),
     ],
     "pq1_product_quantize": [
         (r"BroadcastNestedLoopJoin", "the unioned ~20-row codebook broadcasts; encoding is one corpus scan with 4 in-row argmins"),
-        (r"!PythonUDF", "subspace slicing + argmin folds are codegen"),
+        (r"!EvalPython", "subspace slicing + argmin folds are codegen"),
     ],
     "qc1_quality_classifier": [
         (r"!Exchange hashpartitioning", "scoring is per-row codegen — no exchange except fan_out/order"),
         (r"!\(\d+\) Generate", "bigram features built by in-row transform over an index sequence, not explode"),
-        (r"!PythonUDF", "hashing and the weight fold are codegen"),
+        (r"!EvalPython", "hashing and the weight fold are codegen"),
     ],
     "ir3_inverted_index": [
         (r"(?s)HashAggregate.*Exchange.*HashAggregate", "(term,doc) tf counts partial-aggregate map-side before the index shuffle"),
@@ -439,26 +441,26 @@ EXPECTATIONS: dict[str, list[tuple[str, str]]] = {
     ],
     "nd1_incremental_neardup": [
         (r"(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)", "batch probes hash-join into the banded index on (band, digest) — no quadratic compare"),
-        (r"!PythonUDF", "signature + band digests + agreement count are codegen"),
+        (r"!EvalPython", "signature + band digests + agreement count are codegen"),
     ],
     "sd1_semdedup": [
         (r"BroadcastNestedLoopJoin", "centroid row broadcast — assignment is zero-shuffle in-row argmin"),
         (r"\(\d+\) Window", "the ONE cid exchange: predecessors arrive as lag(struct) columns of the rank window"),
         (r"!(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)", "no self-join — the lag form replaced the probe join that flipped broadcast->SMJ with input size (10x sweep catch)"),
         (r"!\(\d+\) Generate", "no probe-side explode either — W candidates are W lag columns"),
-        (r"!PythonUDF", "quantization, dot products and the cosine gate are integer codegen"),
+        (r"!EvalPython", "quantization, dot products and the cosine gate are integer codegen"),
     ],
     "ds1_dsir_select": [
         (r"(?s)HashAggregate.*Exchange.*HashAggregate", "bucket counts partial-aggregate map-side; the exchange carries <=512 keys' partials"),
         (r"BroadcastNestedLoopJoin", "512-entry score array attached as a broadcast single-row — per-doc scoring is an in-row fold"),
         (r"!\(\d+\) Window", "selection threshold is data-independent — no global ranking window anywhere"),
-        (r"!PythonUDF", "hashing and the weight fold are codegen"),
+        (r"!EvalPython", "hashing and the weight fold are codegen"),
     ],
     "url1_url_canonicalize": [
         (r"ReadSchema: struct<doc_id:[^\n]*source", "scan reads only (doc_id, source)"),
         (r"!ReadSchema: [^\n]*text", "the text column is never read — URL dedup costs metadata IO only"),
         (r"(?s)HashAggregate.*Exchange.*HashAggregate", "census partial-aggregates map-side before the (domain,curl) exchange"),
-        (r"!PythonUDF", "the whole canonicalizer chain is regexp/split/sort codegen"),
+        (r"!EvalPython", "the whole canonicalizer chain is regexp/split/sort codegen"),
         (r"!\(\d+\) Generate", "query-param sort is in-row array_sort, not explode"),
     ],
     "ar4_gram_matrix": [
@@ -470,44 +472,44 @@ EXPECTATIONS: dict[str, list[tuple[str, str]]] = {
     "qr1_gopher_rules": [
         (r"(?s)HashAggregate.*Exchange.*HashAggregate", "per-source rule census partial-aggregates map-side"),
         (r"!\(\d+\) Generate", "all seven rules are in-row token/line folds and filters — no explode"),
-        (r"!PythonUDF", "cross-multiplied integer comparisons are codegen"),
+        (r"!EvalPython", "cross-multiplied integer comparisons are codegen"),
         (r"!Join", "no join operator anywhere"),
     ],
     "sk6_kmv_per_group": [
         (r"WindowGroupLimit", "per-group k smallest hashes rank map-side — each partition ships <=k rows PER GROUP"),
         (r"(?s)HashAggregate.*Exchange.*HashAggregate", "distinct (group, hash) partial-aggregates before its exchange"),
-        (r"!PythonUDF", "hashing and the estimator are codegen"),
+        (r"!EvalPython", "hashing and the estimator are codegen"),
     ],
     "dr1_distribution_drift": [
         (r"(?s)HashAggregate.*Exchange.*HashAggregate", "bucket counts partial-aggregate map-side; the exchange carries <=256 keys' partials"),
         (r"BroadcastNestedLoopJoin", "1-row totals broadcast back onto the 256-row bucket frame"),
         (r"!(SortMergeJoin|ShuffledHashJoin)", "no keyed join anywhere — drift is two aggregates"),
-        (r"!PythonUDF", "cross-multiplied integer L1 is codegen decimal math"),
+        (r"!EvalPython", "cross-multiplied integer L1 is codegen decimal math"),
     ],
     "sk5_hll_distinct": [
         (r"(?s)HashAggregate.*Exchange.*HashAggregate", "register maxima partial-aggregate map-side; the exchange carries <=256 keys' partials"),
-        (r"!PythonUDF", "register math is integer codegen (bin() bitlength, shifts)"),
+        (r"!EvalPython", "register math is integer codegen (bin() bitlength, shifts)"),
     ],
     "tx14_bpe_encode": [
         (r"!Exchange hashpartitioning", "the merge chain is per-row codegen — no exchange except fan_out/order"),
-        (r"!PythonUDF", "every merge pass is a codegen replace()"),
+        (r"!EvalPython", "every merge pass is a codegen replace()"),
         (r"!\(\d+\) Generate", "no explode anywhere — the token stream never leaves the row"),
     ],
     "rl1_release_pipeline": [
         (r"(?s)HashAggregate.*Exchange.*HashAggregate", "exact-dedup digest groupBy and the shard manifest partial-aggregate map-side"),
         (r"LeftAnti", "near-dup and contamination filters are anti joins — no pair stream materialized"),
-        (r"!PythonUDF", "all six stages are codegen expressions"),
+        (r"!EvalPython", "all six stages are codegen expressions"),
     ],
     "vo1_oov_census": [
         (r"(?s)HashAggregate.*Exchange.*HashAggregate", "per-(source,lang) totals partial-aggregate map-side"),
-        (r"!PythonUDF", "vocabulary membership is an in-row codegen array filter"),
+        (r"!EvalPython", "vocabulary membership is an in-row codegen array filter"),
         (r"!\(\d+\) Generate", "no explode — the token stream never leaves the row"),
         (r"!Join", "the vocabulary is a literal array, not a join"),
     ],
     "mx2_temperature_mixture": [
         (r"(?s)HashAggregate.*Exchange.*HashAggregate", "per-source totals partial-aggregate map-side"),
         (r"BroadcastHashJoin|BroadcastNestedLoopJoin", "the tiny threshold model broadcast back — document rows never shuffle for the join"),
-        (r"!PythonUDF", "sqrt fold + ppm thresholds are codegen"),
+        (r"!EvalPython", "sqrt fold + ppm thresholds are codegen"),
     ],
     # st13 is audited by pytest instead (tests/test_streaming.py): its
     # returned frame is a batch read of the streaming sink, so the
@@ -520,17 +522,17 @@ EXPECTATIONS: dict[str, list[tuple[str, str]]] = {
     ],
     "qc2_threshold_yield": [
         (r"(?s)HashAggregate.*Exchange.*HashAggregate", "yield grid partial-aggregates map-side to |sources| x |grid| rows before the exchange"),
-        (r"!PythonUDF", "classifier scoring + grid explode are codegen"),
+        (r"!EvalPython", "classifier scoring + grid explode are codegen"),
         (r"!(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)", "no join — the grid is an in-row literal array explode"),
     ],
     "tv1_tokenizer_fertility": [
         (r"(?s)HashAggregate.*Exchange.*HashAggregate", "per-(source,lang) totals partial-aggregate map-side"),
-        (r"!PythonUDF", "the BPE merge chain is codegen replace()"),
+        (r"!EvalPython", "the BPE merge chain is codegen replace()"),
         (r"!\(\d+\) Generate", "no explode — token counts are in-row folds"),
     ],
     "srt1_range_shards": [
         (r"BroadcastNestedLoopJoin", "the 7-value boundary row broadcast onto the corpus — assignment is an in-row fold"),
-        (r"!PythonUDF", "boundary math and shard assignment are codegen"),
+        (r"!EvalPython", "boundary math and shard assignment are codegen"),
         # formatted plans split the node name and its Arguments onto
         # separate lines, so match the Arguments form; exactly ONE
         # rangepartitioning is allowed (the final output-ordering
@@ -550,13 +552,13 @@ EXPECTATIONS: dict[str, list[tuple[str, str]]] = {
     "ln1_span_dedup": [
         (r"(?s)HashAggregate.*Exchange.*HashAggregate", "first-occurrence min(struct) partial-aggregates map-side before the block-hash shuffle"),
         (r"(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)", "keepers join back on the block-hash key"),
-        (r"!PythonUDF", "block building + digests are codegen"),
+        (r"!EvalPython", "block building + digests are codegen"),
     ],
     # ---- round 8 additions
     "qc3_logreg_train": [
         (r"(?s)HashAggregate.*Exchange.*HashAggregate", "per-iteration gradient is a partial (map-side combined) 512-key aggregate — the only corpus-sized exchange"),
         (r"BroadcastNestedLoopJoin", "the 512-weight array rides a 1-row broadcast; the margin fold is in-row, zero shuffle per scan"),
-        (r"!PythonUDF", "hard-sigmoid GD is entirely codegen integer arithmetic"),
+        (r"!EvalPython", "hard-sigmoid GD is entirely codegen integer arithmetic"),
     ],
     "qc4_logreg_accuracy": [
         (r"ReadSchema: struct<text:string>", "scan reads only text (qc4 ignores the shared frame's doc_id-keyed split column)"),
@@ -570,7 +572,7 @@ EXPECTATIONS: dict[str, list[tuple[str, str]]] = {
         (r"WindowGroupLimit", "per-query rank<=k executes as partial (map-side) top-k"),
         (r"BroadcastHashJoin", "code table joins the queries-x-nprobe broadcast on the small int cell key — corpus never shuffled"),
         (r"BroadcastNestedLoopJoin", "packed codebook/centroid arrays ride 1-row broadcasts; encode + LUTs are in-row"),
-        (r"!PythonUDF", "ADC is codegen integer arithmetic (map lookups + adds)"),
+        (r"!EvalPython", "ADC is codegen integer arithmetic (map lookups + adds)"),
     ],
     "sim8_ivfpq_recall": [
         (r"WindowGroupLimit", "both truth and ADC top-k run as partial top-k"),
@@ -588,7 +590,7 @@ EXPECTATIONS: dict[str, list[tuple[str, str]]] = {
     "tx15_bpe_roundtrip": [
         (r"(?s)HashAggregate.*Exchange.*HashAggregate", "round-trip census partial-aggregates on the tiny source key"),
         (r"ReadSchema: struct<text:string,source:string>", "scan reads only text+source"),
-        (r"!PythonUDF", "encode chain and decode (join/split/join) are codegen"),
+        (r"!EvalPython", "encode chain and decode (join/split/join) are codegen"),
     ],
     "xm2_winnow_compaction": [
         (r"(?s)HashAggregate.*Exchange.*HashAggregate", "per-doc max(ver) is a partial (map-side combined) aggregate"),
@@ -598,336 +600,30 @@ EXPECTATIONS: dict[str, list[tuple[str, str]]] = {
 }
 
 
-def _skew_join_section(spark, failures: list) -> str:
-    """Demonstrate AQE skew-join splitting — the runtime complement to the
-    explicit salting operators (tk1/tk2): a join whose fact side puts 80%
-    of rows on one key re-plans at runtime with the hot partition split
-    (``skew=true`` in the final adaptive SortMergeJoin). At 100 TB this is
-    the default first line of defense; deterministic salting remains for
-    aggregations and for joins AQE cannot split (e.g. under required
-    distributions)."""
-    import io
-    import re as _re
-    from contextlib import redirect_stdout
-
-    from pyspark.sql import functions as F
-
-    prev = {
-        k: spark.conf.get(k, None)
-        for k in (
-            "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.shuffle.partitions",
-        )
-    }
-    # thresholds (and partition count) scaled down so the audit-sized
-    # input exhibits the same runtime re-plan a production job sees at
-    # default (256MB) thresholds
-    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-    spark.conf.set(
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "64KB"
-    )
-    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "32KB")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        fact = spark.range(0, 200_000).select(
-            F.when(F.col("id") % 5 != 0, 0).otherwise(F.col("id")).alias("k"),
-            F.rand(7).alias("v"),
-        )
-        dim = spark.range(0, 50_000).select(
-            F.col("id").alias("k"), (F.col("id") * 2).alias("w")
-        )
-        j = fact.join(dim, "k").groupBy().agg(F.sum("w").alias("s"))
-        j.collect()  # AQE re-plans at runtime; explain shows the final plan
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            j.explain("formatted")
-        plan = buf.getvalue()
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-    markers = _re.findall(r"skew=true", plan)
-    ok = len(markers) >= 1
-    if not ok:
-        failures.append(("aqe_skew_join", "skew=true marker in adaptive plan"))
-    tree = plan.split("\n\n")[0]
-    return (
-        "## AQE skew-join (runtime hot-partition split)\n\n"
-        "80%-hot-key fact joined to a uniform dim; the final adaptive plan "
-        "splits the hot partition:\n\n"
-        f"- {'✅' if ok else '❌'} `skew=true` markers in final adaptive "
-        f"SortMergeJoin: {len(markers)}\n\n"
-        f"```\n{tree}\n```\n"
-    )
+def _holds(pattern: str, plan: str) -> bool:
+    if pattern.startswith("!"):
+        return re.search(pattern[1:], plan) is None
+    return re.search(pattern, plan) is not None
 
 
-def _bucketing_section(spark, failures: list) -> str:
-    """Demonstrate the co-located-join layout (sinks/bucketed.py): both
-    fact tables written bucketed+sorted by the join key -> the join plans
-    with NO Exchange on either side. Uses sf0.001 inputs; the property is
-    size-independent (it comes from the scan's reported distribution)."""
-    import tempfile
-
-    from aristoteles_spark.sinks.bucketed import colocated_join, write_bucketed
-
-    tmp = tempfile.mkdtemp(prefix="bucket_audit_")
-    li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet").select(
-        "l_orderkey", "l_quantity"
-    )
-    o = (
-        spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-        .select("o_orderkey", "o_totalprice")
-        .withColumnRenamed("o_orderkey", "l_orderkey")
-    )
-    write_bucketed(li, "audit_b_li", "l_orderkey", 8, f"{tmp}/li")
-    write_bucketed(o, "audit_b_o", "l_orderkey", 8, f"{tmp}/o")
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = colocated_join(spark, "audit_b_li", "audit_b_o", "l_orderkey")
-        plan = j._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS audit_b_li")
-        spark.sql("DROP TABLE IF EXISTS audit_b_o")
-    checks = [
-        ("Exchange" not in plan, "no Exchange — both sides pre-bucketed on the join key"),
-        ("SortMergeJoin" in plan, "sort-merge join zips matching buckets"),
-    ]
-    notes = []
-    for ok, why in checks:
-        notes.append(f"- {'✅' if ok else '❌'} {why}")
-        if not ok:
-            failures.append(("bucketed_colocated_join", why))
-    tree = "\n".join(plan.splitlines()[:12])
-    return (
-        "## bucketed co-located join (sinks/bucketed.py)\n\n"
-        "Both fact tables written `bucketBy(8, l_orderkey).sortBy` — the\n"
-        "join-key shuffle is paid once at write time; every later join on\n"
-        "the key is exchange-free:\n\n" + "\n".join(notes) + f"\n\n```\n{tree}\n```\n"
-    )
-
-
-def _partition_pruning_section(spark, failures: list) -> str:
-    """Evidence that a filter on the partition column prunes directories at
-    planning time (the daily sink's date-partitioned layout exists exactly
-    for this: a time-range query over a 100 TB archive must list only the
-    matching day directories, not scan-and-filter)."""
-    import tempfile
-
-    from aristoteles_spark.sources.parquet_source import load_table
-
-    tmp = tempfile.mkdtemp(prefix="prune_audit_")
-    ev = load_table(spark, "/root/testdata/sf0.001", "events").select(
-        "event_id", "event_type", "value"
-    )
-    ev.write.mode("overwrite").partitionBy("event_type").parquet(tmp)
-    q = spark.read.parquet(tmp).filter("event_type = 'click'").groupBy().count()
-    import io
-    from contextlib import redirect_stdout
-
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        q.explain("formatted")
-    plan = buf.getvalue()
-    checks = [
-        (
-            re.search(r"PartitionFilters: \[[^\]]*event_type[^\]]*=[^\]]*click", plan)
-            is not None,
-            "partition filter applied at file-listing time (directory pruning)",
-        ),
-        (
-            "Filter (" not in plan.split("\n\n")[0],
-            "no post-scan Filter node — the predicate is fully absorbed by pruning",
-        ),
-    ]
-    notes = []
-    for ok, why in checks:
-        notes.append(f"- {'✅' if ok else '❌'} {why}")
-        if not ok:
-            failures.append(("partition_pruning", why))
-    tree = plan.split("\n\n")[0]
-    m = re.search(r"PartitionFilters: \[[^\]]*\]", plan)
-    pf = m.group(0) if m else "(not found)"
-    return (
-        "## partition pruning (date/key-partitioned layout)\n\n"
-        "events written `partitionBy(event_type)`; a query filtering on the\n"
-        "partition column lists only matching directories:\n\n"
-        + "\n".join(notes)
-        + f"\n\n`{pf}`\n\n```\n{tree}\n```\n"
-    )
-
-
-def _data_skipping_section(spark, failures: list) -> str:
-    """Evidence that value-clustering the file layout (sort by the filter
-    column at write time) lets parquet row-group min/max statistics skip
-    most of the file for a narrow range predicate. At 100 TB this is the
-    difference between scanning a shard and scanning the archive: the
-    sorted layout gives each row group a tight l_shipdate span, so the
-    reader's PushedFilters prune row groups before any IO."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    tmp = tempfile.mkdtemp(prefix="skip_audit_")
-    li = spark.read.parquet("/root/testdata/sf0.01/lineitem.parquet").select(
-        "l_orderkey", "l_shipdate", "l_extendedprice"
-    )
-    # small row groups so sf0.01 yields many prunable units (the 100 TB
-    # analogue is the default 128 MB group)
-    opts = {"parquet.block.size": str(64 * 1024)}
-    (
-        li.repartition(1)
-        .sortWithinPartitions("l_shipdate")
-        .write.options(**opts)
-        .mode("overwrite")
-        .parquet(f"{tmp}/clustered")
-    )
-    (
-        li.repartition(1)
-        .sortWithinPartitions(F.hash("l_orderkey"))
-        .write.options(**opts)
-        .mode("overwrite")
-        .parquet(f"{tmp}/scattered")
-    )
-
-    # row groups a min/max-pruning reader must touch for the range
-    # predicate — computed straight from the parquet footer stats, i.e.
-    # exactly the information PushedFilters prunes on
-    import datetime
-    import glob
-
-    import pyarrow.parquet as pq
-
-    lo = datetime.datetime(1997, 6, 1)
-    hi = datetime.datetime(1997, 7, 1)
-
-    def overlap(path: str) -> tuple[int, int]:
-        must_read = total = 0
-        for f in glob.glob(f"{path}/*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            ship_idx = md.schema.to_arrow_schema().get_field_index("l_shipdate")
-            for g in range(md.num_row_groups):
-                st = md.row_group(g).column(ship_idx).statistics
-                total += 1
-                mn = st.min.replace(tzinfo=None)
-                mx = st.max.replace(tzinfo=None)
-                if mx >= lo and mn < hi:
-                    must_read += 1
-        return must_read, total
-
-    c_read, c_total = overlap(f"{tmp}/clustered")
-    s_read, s_total = overlap(f"{tmp}/scattered")
-    ok = c_read <= max(2, c_total // 8) and s_read >= s_total - 1
-    if not ok:
-        failures.append(
-            (
-                "data_skipping",
-                f"clustered {c_read}/{c_total} vs scattered {s_read}/{s_total} "
-                "row groups overlap the predicate — expected tight vs total",
-            )
-        )
-    return (
-        "## data skipping via value-clustered layout\n\n"
-        "Same table, same narrow date-range predicate (one month of ~7\n"
-        "years); the only difference is file-write order. Row-group\n"
-        "min/max footer stats — what the reader's PushedFilters prune\n"
-        "on — only bound the predicate tightly in the clustered layout:\n\n"
-        f"- {'✅' if ok else '❌'} clustered layout: {c_read} of {c_total} "
-        f"row groups overlap the range; scattered: {s_read} of {s_total} "
-        "— sort-on-write turns a full scan into a pinpoint read\n"
-    )
-
-
-def main() -> int:
-    from aristoteles_spark.session import get_spark
+@pytest.fixture(scope="module")
+def registry():
     import __spark_entry__ as entrymod
 
-    # the dedup/sketch operators end in an eager localCheckpoint barrier
-    # (cache-release seam); explain() of the registry frame would show
-    # only a checkpoint scan. The flag skips the barrier so the audited
-    # plan is the strategy plan the checkpoint materialization runs.
-    os.environ["SPARK_GRAFT_AUDIT_NO_BARRIER"] = "1"
-
-    spark = get_spark("plan_audit")
-    qs = entrymod.queries()
-
-    # dd12/sim6 return a localCheckpoint (so their sample cache can be
-    # released before a 220-query session continues), which collapses
-    # the registry frame's explain to a checkpoint scan. Audit their
-    # PRE-checkpoint builders instead — the plan that actually runs —
-    # and release the cache handle after the explain.
-    def _pre_checkpoint(builder):
-        def run(spark, sf_dir):
-            out, cached = builder(spark, sf_dir)
-            return out, cached
-        return run
-
-    from aristoteles_spark.queries.dedup import _lsh_quality_plan
-    from aristoteles_spark.queries.similarity import _ann_recall_plan
-
-    builders = {
-        "dd12_lsh_quality": _pre_checkpoint(_lsh_quality_plan),
-        "sim6_ann_recall": _pre_checkpoint(_ann_recall_plan),
-    }
-
-    failures = []
-    sections = []
-    for name, checks in EXPECTATIONS.items():
-        cached = None
-        if name in builders:
-            df, cached = builders[name](spark, SF_DIR)
-        else:
-            df = qs[name](spark, SF_DIR)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
-        if cached is not None:
-            cached.unpersist()
-        notes = []
-        for pattern, why in checks:
-            # '!'-prefixed pattern = must NOT appear (e.g. zero-shuffle
-            # claims assert the absence of any Exchange)
-            if pattern.startswith("!"):
-                ok = re.search(pattern[1:], plan) is None
-            else:
-                ok = re.search(pattern, plan) is not None
-            notes.append(f"- {'✅' if ok else '❌'} `{pattern}` — {why}")
-            if not ok:
-                failures.append((name, pattern))
-        # keep only the operator-tree header of the plan (the detail
-        # section repeats per-node and is long)
-        tree = plan.split("\n\n")[0]
-        sections.append(f"## {name}\n\n" + "\n".join(notes) + f"\n\n```\n{tree}\n```\n")
-
-    sections.append(_bucketing_section(spark, failures))
-    sections.append(_skew_join_section(spark, failures))
-    sections.append(_partition_pruning_section(spark, failures))
-    sections.append(_data_skipping_section(spark, failures))
-
-    out = (
-        "# Physical-plan audit\n\n"
-        f"Generated by tools/plan_audit.py at sf_dir={SF_DIR}. Each section\n"
-        "lists the plan properties the design depends on and the operator\n"
-        "tree Spark actually produced.\n\n" + "\n".join(sections)
-    )
-    with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
-        f.write(out)
-    if failures:
-        print("MISSING PLAN PROPERTIES:")
-        for name, pat in failures:
-            print(f"  {name}: {pat}")
-        return 1
-    print(f"all {sum(len(v) for v in EXPECTATIONS.values())} plan properties present; PLANS.md written")
-    return 0
+    return entrymod.queries()
 
 
-if __name__ == "__main__":
-    sys.exit(main())
+@pytest.mark.parametrize("name", list(EXPECTATIONS))
+def test_plan_properties(spark, registry, name):
+    from aristoteles_spark.operators.barrier import no_barriers
+
+    buf = io.StringIO()
+    with no_barriers(), redirect_stdout(buf):
+        registry[name](spark, SF_SMOKE).explain("formatted")
+    plan = buf.getvalue()
+    missing = [
+        f"{pattern} — {why}"
+        for pattern, why in EXPECTATIONS[name]
+        if not _holds(pattern, plan)
+    ]
+    assert not missing, f"{name}: plan properties not met:\n" + "\n".join(missing)

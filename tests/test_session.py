@@ -12,14 +12,14 @@ def _meta_dirs():
 
 
 def test_call_site_capture_off(spark):
-    s = get_spark("aristoteles_spark_tests", cpus=8)
+    s = get_spark("aristoteles_spark_tests")
     assert s.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
 
 
 def test_live_session_makes_no_warehouse_dir(spark):
     before = _meta_dirs()
     for _ in range(2):
-        assert get_spark("aristoteles_spark_tests", cpus=8) is spark
+        assert get_spark("aristoteles_spark_tests") is spark
     assert _meta_dirs() == before
 
 

@@ -2,10 +2,10 @@
 
 Writes plans/<query>_<suffix>.txt for each named query; plans/ is not
 committed, the executed-plan hash in BENCH_DETAIL.json is the record. Runs
-with SPARK_GRAFT_AUDIT_NO_BARRIER=1 so localCheckpoint barriers and session
-shared-table memos are bypassed and the FULL strategy plan (every
+under ``operators.barrier.no_barriers()`` so localCheckpoint barriers and
+session shared-table memos are bypassed and the FULL strategy plan (every
 Exchange / join / scan the computation would run) is visible — the same
-regime tools/plan_audit.py asserts on.
+regime tests/test_plans.py asserts on.
 
 Usage: python tools/capture_plans.py [--out plans/] [--suffix before] q1 [q2 ...]
 """
@@ -14,8 +14,6 @@ from __future__ import annotations
 
 import os
 import sys
-
-os.environ["SPARK_GRAFT_AUDIT_NO_BARRIER"] = "1"
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -36,6 +34,7 @@ def main() -> None:
             names.append(a)
 
     import __spark_entry__ as entrymod
+    from aristoteles_spark.operators.barrier import no_barriers
     from aristoteles_spark.session import get_spark
 
     spark = get_spark("capture_plans")
@@ -45,11 +44,13 @@ def main() -> None:
         if n not in qs:
             print(f"unknown query: {n}", file=sys.stderr)
             continue
-        df = qs[n](spark, SF_DIR)
+        with no_barriers():
+            df = qs[n](spark, SF_DIR)
+            plan = df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted")
         path = os.path.join(out_dir, f"{n}_{suffix}.txt")
         with open(path, "w") as f:
-            f.write(df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"))
+            f.write(plan)
         print(f"wrote {path}")
 
 

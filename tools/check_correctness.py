@@ -152,7 +152,7 @@ def main():
         print(f"\n{len(names)} declared; first {n} = driver window")
         return
     only = set(a for a in argv if not a.startswith("--"))
-    spark = get_spark("check_correctness", cpus=8)
+    spark = get_spark("check_correctness")
     con = duckdb.connect()
     for t in [
         "region", "nation", "customer", "supplier", "part",

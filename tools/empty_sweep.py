@@ -47,7 +47,7 @@ def main() -> int:
 
     only = set(sys.argv[1:])
     fixture = make_empty_fixture()
-    spark = get_spark("empty_sweep", cpus=8)
+    spark = get_spark("empty_sweep")
     qs = entrymod.queries()
     bad = []
     for name, fn in qs.items():

@@ -21,7 +21,7 @@ over a symlinked alias of the small data JIT-compiles the query's code
 paths; the memo is keyed by path, so it stays cold for the charged
 calls, and the small scale does not pay first-use compile time in its
 build seconds when the big scale does not. The plan is counted
-under the plan-audit flag (operators/barrier.py), so shared builds and
+inside operators.barrier.no_barriers(), so shared builds and
 localCheckpoint barriers stay inline and their exchanges are counted.
 
 Scale-up construction — the part that makes the sweep honest:
@@ -328,11 +328,10 @@ def _explain(df) -> str:
 def _plan_counts(fn, spark, sf_dir: str) -> tuple[int, int, int]:
     """(exchanges, broadcast hash joins, sort-merge joins) in the
     pre-execution strategy plan of ``fn`` at ``sf_dir``."""
-    os.environ["SPARK_GRAFT_AUDIT_NO_BARRIER"] = "1"
-    try:
+    from aristoteles_spark.operators.barrier import no_barriers
+
+    with no_barriers():
         s = _explain(fn(spark, sf_dir))
-    finally:
-        del os.environ["SPARK_GRAFT_AUDIT_NO_BARRIER"]
     return (
         len(re.findall(r"\bExchange\b", s)),
         len(re.findall(r"BroadcastHashJoin", s)),
