@@ -28,6 +28,8 @@ Conversion factors (reference aristoteles.py:421-436):
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -63,12 +65,19 @@ def convert_measure(
     return F.when((us != 0) & c.isNotNull(), conv(c)).otherwise(c)
 
 
-def conversion_exprs(strict: bool = True, us_units: str = "usUnits") -> list[Column]:
-    """All 16 measure conversion expressions, aliased to their own names."""
-    return [
+@functools.lru_cache(maxsize=None)
+def conversion_exprs(strict: bool = True, us_units: str = "usUnits") -> tuple[Column, ...]:
+    """All 16 measure conversion expressions, aliased to their own names.
+
+    Built once per process and argument pair, as a tuple so the shared
+    value cannot be mutated. The expressions are unresolved, bound to no
+    session, so every later frame (a later session in the same process
+    too) reuses them instead of paying their py4j round trips again.
+    """
+    return tuple(
         convert_measure(m, tag, us_units=us_units, strict=strict).alias(m)
         for m, tag in MEASURE_TYPES.items()
-    ]
+    )
 
 
 def convert_dataframe(df, strict: bool = True):

@@ -8,7 +8,9 @@ reads the watermark, gates on the target day's completeness, then:
       -> convert_dataframe (Catalyst when/otherwise, codegen'd)
       -> one projection: NULL -> NaN and the UTC ``date`` column
       -> ONE write of every pending day into a hidden staging directory,
-         partitioned by date (one file per day)
+         partitioned by date (one file per day), in
+         min(pending days, defaultParallelism) tasks: a one-day run is
+         one task with no shuffle, a catch-up hashes days onto its tasks
       -> publish on the driver, day by day in order: lock, swap the
          staged partition in (sinks/compact.swap_partition), sidecar,
          unlock, advance the watermark
@@ -16,7 +18,10 @@ reads the watermark, gates on the target day's completeness, then:
 Each run exports its wall seconds per stage (``probe``: the min and gate
 SQLite probes, ``read``, ``write``: convert plus the staging job,
 ``publish``) as ``aristoteles_stage_seconds`` in the Prometheus textfile,
-on a crash too.
+on a crash too. The conversion expressions and the sink projection are
+built once per process (they are unresolved Columns, bound to no
+session), so a cron invocation's plan build is two selects over cached
+tuples.
 
 Deliberately batch-incremental, NOT Structured Streaming: emission is
 completeness-*triggered* (hold a day until every station has 288 samples),
@@ -30,6 +35,7 @@ from the watermark on.
 from __future__ import annotations
 
 import datetime as dt
+import functools
 import os
 import shutil
 import time
@@ -37,14 +43,14 @@ from collections import Counter
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from aristoteles_spark.functions.units import convert_dataframe
 from aristoteles_spark.obs.prom import PromBuffer
 from aristoteles_spark.plans import days as D
 from aristoteles_spark.plans import state as S
-from aristoteles_spark.schema import SAMPLES_PER_DAY
+from aristoteles_spark.schema import ARCHIVE_COLUMNS, MEASURE_TYPES, SAMPLES_PER_DAY
 from aristoteles_spark.sinks.compact import recover_compaction, staging_dir, swap_partition
 from aristoteles_spark.sinks.daily_parquet import lock_path, write_sidecar
 from aristoteles_spark.sources.sqlite_source import (
@@ -163,6 +169,25 @@ def run(
         prom.flush(conf.netfc_path, result.status)
 
 
+@functools.lru_cache(maxsize=None)
+def _sink_columns() -> tuple[Column, ...]:
+    """The staged frame's projection over the converted columns: the
+    reference's NULL -> NaN on every measure (np.asarray(...,
+    dtype=float), aristoteles.py:346) and the UTC day by integer
+    arithmetic, independent of the session time zone. Built on first use,
+    once per process: a Column needs a running JVM, so it cannot be a
+    module constant."""
+    nan = F.lit(float("nan"))
+    return (
+        F.col("station"),
+        *[
+            F.coalesce(F.col(c), nan).alias(c) if c in MEASURE_TYPES else F.col(c)
+            for c in ARCHIVE_COLUMNS
+        ],
+        F.date_from_unix_date(F.floor(F.col("dateTime") / 86400).cast("int")).alias("date"),
+    )
+
+
 def _stage_days(
     spark: SparkSession,
     conf: PipelineConfig,
@@ -175,27 +200,27 @@ def _stage_days(
     in ONE job to ``staging``, partitioned by ``date`` with one file per
     day; a day without rows gets no partition. Returns rows per day,
     counted by an Observation on the write job itself (no second pass
-    over the data)."""
-    df = convert_dataframe(raw, strict=conf.strict_units)
-    # one projection: the reference's NULL -> NaN (np.asarray(...,
-    # dtype=float), aristoteles.py:346) and the UTC day by integer
-    # arithmetic, independent of the session time zone
-    nan = F.lit(float("nan"))
-    out = (
-        df.select(
-            *[F.coalesce(c, nan).alias(c) if t == "double" else c for c, t in df.dtypes],
-            F.date_from_unix_date(F.floor(F.col("dateTime") / 86400).cast("int")).alias("date"),
-        )
-        .repartition("date")
-        .sortWithinPartitions("date", "station", "dateTime")
-    )
+    over the data).
+
+    The write runs ``min(days in the span, defaultParallelism)`` tasks.
+    Each day is written as one file, so one task always writes a whole
+    day: one pending day never needs more than one task, and N days never
+    need more than N. One task is a ``coalesce(1)``: no shuffle, a single
+    job with a single task. More are an explicit ``repartition(n,
+    "date")``, which AQE does not coalesce, so a long catch-up keeps
+    every core."""
+    days = list(D.span_range(first, last))
+    tasks = min(len(days), spark.sparkContext.defaultParallelism)
+    out = convert_dataframe(raw, strict=conf.strict_units).select(*_sink_columns())
+    out = out.coalesce(1) if tasks == 1 else out.repartition(tasks, "date")
+    out = out.sortWithinPartitions("date", "station", "dateTime")
     # one day offset per row: linear in rows, where one count per day
     # would evaluate every day's predicate on every row
     obs = Observation("staged_rows")
     observed = out.observe(obs, F.collect_list(F.datediff("date", F.lit(first))).alias("day"))
     observed.write.partitionBy("date").format(conf.output_format).save(staging)
     per_day = Counter(obs.get["day"])
-    return {d: per_day[i] for i, d in enumerate(D.span_range(first, last))}
+    return {d: per_day[i] for i, d in enumerate(days)}
 
 
 def _publish_day(conf: PipelineConfig, staging: str, day: dt.date) -> bool:

@@ -61,6 +61,17 @@ def get_spark(
         # entries, so the cap is headroom, not a memory commitment.
         .config("spark.sql.codegen.cache.maxEntries", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # Tungsten page: Spark sizes it heap / cores / 16, capped at 64 MB,
+        # so 64 MB on a 16g driver. Every sort or hash-aggregate task that
+        # sees a row allocates at least one page, which the JVM zeroes, and
+        # freed pages linger as G1 humongous regions: a one-day ETL write of
+        # 864 rows touched 64 MB per task, and the driver's peak RSS
+        # followed how many such pages happened to be live at once
+        # (perfbench etl_daily on 4 cores, JVM peak: 850-1310 MB at 64 MB
+        # pages, 715-830 MB at 4 MB; query_mix no slower). At 4 MB a task
+        # can still address 8192 pages = 32 GB, above the execution memory
+        # of a 48g heap (host_driver_mem's cap).
+        .config("spark.buffer.pageSize", "4m")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # iterative operators localCheckpoint per round; the blocks are

@@ -176,15 +176,17 @@ def test_one_day_run_starts_only_its_write_jobs(spark, tmp_path, station_db):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    # the staging write: its shuffle map stage (run as its own job under
-    # AQE) and the write stage; no isEmpty or count job
-    assert len(sc.statusTracker().getJobIdsForGroup("one_day_run")) <= 2
+    # the staging write alone: one day is one coalesced task, so there is
+    # no shuffle map stage (AQE would run it as a job of its own); no
+    # isEmpty or count job
+    assert len(sc.statusTracker().getJobIdsForGroup("one_day_run")) == 1
 
 
 def test_one_day_run_tasks_bounded_by_parallelism(spark, tmp_path, station_db):
-    """Three stations' day is one scan of one Arrow table: the run's tasks
-    do not grow with the station count (a scan per station would start
-    3 x defaultParallelism tasks in its scan stage alone)."""
+    """Three stations' day is one scan of one Arrow table written by one
+    task: the run's tasks do not grow with the station count (a scan per
+    station would start 3 x defaultParallelism tasks in its scan stage
+    alone)."""
     conf = make_conf(tmp_path, station_db, {s: day_rows(DAY1) for s in ("s1", "s2", "s3")})
     sc = spark.sparkContext
     sc.setJobGroup("three_station_day", "three_station_day")
@@ -199,9 +201,47 @@ def test_one_day_run_tasks_bounded_by_parallelism(spark, tmp_path, station_db):
         for j in tracker.getJobIdsForGroup("three_station_day")
         for s in tracker.getJobInfo(j).stageIds
     }
-    # tasks that ran: the write job's copy of the shuffle map stage is skipped
     tasks = sum(tracker.getStageInfo(s).numCompletedTasks for s in stages)
-    assert tasks <= 2 * sc.defaultParallelism, tasks
+    assert tasks == 1, tasks
+
+
+def test_catch_up_writes_one_task_per_day_up_to_parallelism(spark, tmp_path, station_db):
+    """A 6-day backlog with a skip day: the staging write runs
+    min(6, defaultParallelism) tasks, each day is one file, and rows and
+    watermark equal those of six one-day runs."""
+    days = [DAY1 + dt.timedelta(days=i) for i in range(6)]
+    rows = {s: [r for d in days if d != DAY3 for r in day_rows(d)] for s in ("s1", "s2")}
+    last = days[-1]
+    daily = _conf_in(tmp_path, "daily", station_db, rows)
+    for d in days:
+        run(spark, daily, stop=d)
+
+    conf = _conf_in(tmp_path, "backlog", station_db, rows)
+    sc = spark.sparkContext
+    sc.setJobGroup("six_day_backlog", "six_day_backlog")
+    try:
+        res = run(spark, conf, today=last + dt.timedelta(days=1))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert res.days_written == 5 and res.skipped_days == [DAY3]
+    assert res.rows_written == 5 * 2 * 288
+
+    # the write job is the group's last; its last stage writes the files
+    tracker = sc.statusTracker()
+    write_job = tracker.getJobInfo(max(tracker.getJobIdsForGroup("six_day_backlog")))
+    write_stage = tracker.getStageInfo(max(write_job.stageIds))
+    assert write_stage.numCompletedTasks == min(6, sc.defaultParallelism)
+
+    acq = os.path.join(conf.archive, "acq=20200601T000000Z_testinst_weather")
+    for d in days:
+        part = os.path.join(acq, f"date={d.isoformat()}")
+        if d == DAY3:
+            assert not os.path.exists(part)
+        else:
+            assert len([f for f in os.listdir(part) if f.endswith(".parquet")]) == 1, d
+    assert _outcome(spark, conf)[:2] == _outcome(spark, daily)[:2]
+    assert S.read_state(conf.state_path) == last + dt.timedelta(days=1)
 
 
 # ------------------------------------------------------- fault injection
@@ -209,9 +249,9 @@ def test_one_day_run_tasks_bounded_by_parallelism(spark, tmp_path, station_db):
 BACKLOG = {s: day_rows(DAY1) + day_rows(DAY3) for s in ("s1", "s2")}  # DAY2: skip day
 
 
-def _conf_in(tmp_path, name, station_db):
+def _conf_in(tmp_path, name, station_db, station_rows=BACKLOG):
     os.makedirs(tmp_path / name)
-    return make_conf(tmp_path / name, station_db, BACKLOG)
+    return make_conf(tmp_path / name, station_db, station_rows)
 
 
 def _outcome(spark, conf):

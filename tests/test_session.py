@@ -16,6 +16,13 @@ def test_call_site_capture_off(spark):
     assert s.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
 
 
+def test_tungsten_page_is_four_mib(spark):
+    # the size the memory manager hands every sort/aggregate task, not
+    # only the conf string: Spark's own default is 64 MB on a 16g driver
+    mm = spark._jvm.org.apache.spark.SparkEnv.get().memoryManager()
+    assert mm.pageSizeBytes() == 4 << 20
+
+
 def test_live_session_makes_no_warehouse_dir(spark):
     before = _meta_dirs()
     for _ in range(2):

@@ -13,6 +13,7 @@ from aristoteles_spark.functions.units import (
     IN_TO_MM,
     INHG_TO_HPA,
     MPH_TO_KMH,
+    conversion_exprs,
     convert_dataframe,
     convert_measure,
 )
@@ -99,6 +100,16 @@ def test_convert_dataframe_keeps_passthrough_and_row_flag(spark):
     assert out[100]["outTemp"] == pytest.approx(0.0, abs=1e-9)  # US row converted
     assert out[400]["outTemp"] == 32.0  # metric row untouched
     assert out[100]["usUnits"] == 1
+
+
+def test_conversion_exprs_built_once(spark):
+    """The expressions are built once per process, and the cached tuple
+    serves every later frame."""
+    exprs = conversion_exprs()
+    assert isinstance(exprs, tuple) and len(exprs) == len(MEASURES)
+    assert conversion_exprs() is exprs
+    df = _frame(spark, [_row(usUnits=1, outTemp=212.0)])
+    assert convert_dataframe(df).first()["outTemp"] == pytest.approx(100.0, abs=1e-9)
 
 
 def test_plan_is_codegen_only(spark):

@@ -11,6 +11,9 @@ scalar per-cell conversion loop (aristoteles.py:339-476). It publishes no
 numbers (BASELINE.md), so the comparison target is structural: rows/s
 here vs a serial interpreter loop over the same rows.
 
+Each run's wall is split by stage from the ``aristoteles_stage_seconds``
+gauges of the Prometheus textfile the run writes into the work dir.
+
 Rewrites PIPELINE_BENCH.md. Usage: python tools/pipeline_bench.py [days]
 """
 
@@ -19,6 +22,7 @@ from __future__ import annotations
 import datetime as dt
 import os
 import platform
+import re
 import shutil
 import statistics
 import sys
@@ -65,7 +69,17 @@ def synth(workdir: str) -> "PipelineConfig":
         instrument="wx",
         archive=f"{workdir}/archive",
         stations=stations,
+        netfc_path=workdir,
     )
+
+
+def stage_seconds(netfc_path: str) -> dict[str, float]:
+    """The run's ``aristoteles_stage_seconds{stage}`` gauges, from its prom file."""
+    with open(os.path.join(netfc_path, "aristoteles.prom")) as f:
+        return {
+            m[1]: float(m[2])
+            for m in re.finditer(r'^aristoteles_stage_seconds\{stage="(\w+)"\} (\S+)$', f.read(), re.M)
+        }
 
 
 def host() -> str:
@@ -85,7 +99,7 @@ def main() -> None:
     total_rows = N_DAYS * N_STATIONS * SAMPLES
     last = dt.date(2020, 1, 1) + dt.timedelta(days=N_DAYS - 1)
 
-    walls = []
+    walls, stages = [], []
     for _ in range(REPEATS):
         shutil.rmtree(conf.archive, ignore_errors=True)
         if os.path.exists(conf.state_path):
@@ -94,8 +108,19 @@ def main() -> None:
         res = run(spark, conf, stop=last)
         walls.append(time.perf_counter() - t0)
         assert (res.days_written, res.rows_written) == (N_DAYS, total_rows), res
+        stages.append(stage_seconds(conf.netfc_path))
     wall = statistics.median(walls)
+    split = {st: statistics.median(s[st] for s in stages) for st in stages[0]}
 
+    header = ["path", "wall s", "rows/s", "days/s", *(f"{st} s" for st in split)]
+    row = [
+        "`run` (one staged write, per-day publish + watermark)",
+        f"{wall:.1f}",
+        f"{total_rows / wall:,.0f}",
+        f"{N_DAYS / wall:.1f}",
+        *(f"{v:.2f}" for v in split.values()),
+    ]
+    table = "\n".join("| " + " | ".join(r) + " |" for r in (header, ["---"] * len(header), row))
     out = (
         "# Pipeline throughput (reference-parity ETL surface)\n\n"
         f"Generated by tools/pipeline_bench.py: {N_DAYS} days x "
@@ -104,9 +129,12 @@ def main() -> None:
         f"`{spark.sparkContext.master}` on one host: {host()}.\n\n"
         f"`run` catches up the whole span from an empty archive, median of "
         f"{REPEATS} runs (walls {', '.join(f'{w:.1f}' for w in walls)} s):\n\n"
-        "| path | wall s | rows/s | days/s |\n|---|---|---|---|\n"
-        f"| `run` (one staged write, per-day publish + watermark) | {wall:.1f} "
-        f"| {total_rows / wall:,.0f} | {N_DAYS / wall:.1f} |\n\n"
+        f"{table}\n\n"
+        "The stage columns are the median per stage of the runs'\n"
+        "`aristoteles_stage_seconds{stage}` gauges (`plans/pipeline.py`):\n"
+        "`probe` the min and gate SQLite probes, `read` the SQLite reads\n"
+        "into one Arrow table, `write` the conversion plus the staging\n"
+        "job, `publish` the per-day swaps, sidecars and watermark.\n\n"
         "The reference executes this workload as a serial Python loop —\n"
         "one SQLite query and one HDF5 file per day x station, scalar\n"
         "per-cell unit conversion (aristoteles/aristoteles.py:332-476) —\n"
