@@ -50,20 +50,6 @@ def h32(col: Column, seed: int | Column = 0) -> Column:
     return F.conv(F.substring(F.md5(payload.cast("binary")), 1, 8), 16, 10).cast("long")
 
 
-def word_shingles(col: Column | str, k: int = 3) -> Column:
-    """Distinct k-word shingles (token n-grams joined by spaces).
-
-    Built with transform over token indexes — in-row, no explode.
-    """
-    toks = tokens(col)
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    shingle_at = lambda i: F.array_join(F.slice(toks, i + 1, k), " ")
-    return F.when(n >= k, F.array_distinct(F.transform(idx, shingle_at))).otherwise(
-        F.array_distinct(F.when(n > 0, F.array(F.array_join(toks, " "))).otherwise(F.array()))
-    )
-
-
 # Multiply-shift permutation family for MinHash: h_i(x) = (A_i*x + B_i)
 # mod 2^32 over the single md5-derived base hash. One md5 per token total
 # (vs num_hashes md5s) — the md5 is the expensive part. A_i odd < 2^31

@@ -87,23 +87,3 @@ def convert_dataframe(df, strict: bool = True):
     """
     passthrough = [c for c in df.columns if c not in MEASURE_TYPES]
     return df.select(*passthrough, *conversion_exprs(strict=strict))
-
-
-def conversion_sql_case(measure: str, type_tag: str, strict: bool = True) -> str:
-    """ANSI-SQL CASE equivalent of :func:`convert_measure` (for oracles)."""
-    conv = {
-        "pressure": f"{measure} * 33.863886",
-        "temperature": f"({measure} - 32) * 5 / 9",
-        "speed": f"{measure} * 1.609344",
-        "rate": f"{measure} * 25.4",
-        "amount": f"{measure} * 25.4",
-        "percent": None,
-        "direction": None,
-    }[type_tag]
-    if conv is None:
-        return measure
-    zero_guard = f" AND {measure} <> 0" if strict else ""
-    return (
-        f"CASE WHEN usUnits <> 0 AND {measure} IS NOT NULL{zero_guard} "
-        f"THEN {conv} ELSE {measure} END"
-    )

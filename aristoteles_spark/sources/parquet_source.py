@@ -64,10 +64,6 @@ def fan_out(df: DataFrame, parts: int | None = None) -> DataFrame:
     return df.repartition(n)
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every test table as a temp view for spark.sql use."""
     for t in TABLES:

@@ -1,10 +1,9 @@
-"""Shared fixtures: one SparkSession per test run, duckdb oracle helpers,
+"""Shared fixtures: one SparkSession per test run, the test-data scales,
 and synthetic wview archive fixtures per FIXTURES.md scenarios."""
 
 from __future__ import annotations
 
 import datetime as dt
-import math
 import os
 import sys
 
@@ -23,61 +22,6 @@ SF_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_DIR", "/root/testdata/sf0.01")
 def spark():
     s = get_spark("aristoteles_spark_tests")
     yield s
-
-
-# ---------------------------------------------------------------- oracle
-
-
-def _canon(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return f"{v:.9g}"
-    if isinstance(v, dt.datetime):
-        return v.replace(tzinfo=None).isoformat()
-    if isinstance(v, dt.date):
-        return v.isoformat()
-    if v is None:
-        return "NULL"
-    return str(v)
-
-
-def rows_canonical(cols: list[str], rows: list[tuple]) -> list[tuple]:
-    """Order-insensitive, column-name-sorted canonical form (mirrors the
-    driver's compare: sort columns by name, hash values)."""
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    canon = [tuple(_canon(r[i]) for i in order) for r in rows]
-    return sorted(canon)
-
-
-def oracle_con(sf_dir: str):
-    """A duckdb connection with one view per test table in ``sf_dir``."""
-    import duckdb
-
-    con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-    return con
-
-
-def compare_spark_duckdb(spark, sf_dir: str, spark_df, sql: str) -> None:
-    """Assert a Spark result matches the duckdb oracle exactly (canonical)."""
-    oracle = oracle_con(sf_dir).execute(sql)
-    o_cols = [d[0] for d in oracle.description]
-    o_rows = oracle.fetchall()
-    s_rows = [tuple(r) for r in spark_df.collect()]
-    s_cols = spark_df.columns
-    assert sorted(s_cols) == sorted(o_cols), f"schema mismatch: {s_cols} vs {o_cols}"
-    sc = rows_canonical(s_cols, s_rows)
-    oc = rows_canonical(o_cols, o_rows)
-    assert len(sc) == len(oc), f"row count {len(sc)} vs oracle {len(oc)}"
-    mismatches = [(a, b) for a, b in zip(sc, oc) if a != b]
-    assert not mismatches, f"value mismatch (first 3): {mismatches[:3]}"
 
 
 # ------------------------------------------------------- weather fixture

@@ -20,11 +20,9 @@ import os
 import pyarrow.parquet as pq
 import pytest
 
+from aristoteles_spark.sources.parquet_source import TABLES
+
 SRC = "/root/testdata/sf0.001"
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 # the queries the round-6 sweep caught crashing (one per root cause
 # class plus every distinct consumer, so a regression in any fix class

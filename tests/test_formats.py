@@ -246,8 +246,8 @@ class TestCompaction:
 
 class TestIOFormatQueries:
     """The io* driver queries: format roundtrips + bucketed layout
-    (queries/io_formats.py); value-level parity is covered by the
-    check_correctness gate — these assert the physical properties."""
+    (queries/io_formats.py); value-level parity is covered by
+    tests/test_oracle.py — these assert the physical properties."""
 
     def test_bucketed_join_has_no_exchange_before_join(self, spark):
         from aristoteles_spark.queries.io_formats import q_bucketed_join

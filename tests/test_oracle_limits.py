@@ -19,7 +19,8 @@ import re
 import pytest
 
 from aristoteles_spark.queries import all_oracle_sql
-from tests.conftest import SF_ORACLE, oracle_con
+from tests.conftest import SF_ORACLE
+from tools.check_correctness import oracle_con
 
 _ORDER_BY = re.compile(r"\bORDER\s+BY\b", re.I)
 _LIMIT = re.compile(r"\bLIMIT\s+(\d+)\b", re.I)

@@ -1,22 +1,24 @@
-"""Local replica of the driver's correctness gate.
+"""The duckdb oracle: one canonical form and one per-query check.
 
-Runs every ``queries()`` entry from ``__spark_entry__`` at sf0.01 and
-compares against ``oracle_sql()`` via duckdb: row count, column-name set,
-and an order-insensitive canonical value comparison (columns sorted by
-name). Strict: floats must match to 9 significant digits.
+Every declared query (``queries()`` in ``__spark_entry__``) has an
+``oracle_sql()`` text that duckdb runs over the same parquet tables.
+``mismatch`` compares the two results the way the driver's correctness
+gate does, which round 1 showed differs from a numeric compare: the
+driver pulls the duckdb side through a pandas/arrow frame (DECIMAL ->
+float64, HUGEINT -> float64) while Spark rows keep ``decimal.Decimal``
+objects, then compares string forms without float re-rounding. So a
+query whose final schema still contains DECIMAL (or whose oracle sums an
+INT into HUGEINT) fails at the driver even when the values are
+numerically identical ("1400362.00" vs "1400362.0"). The strict form
+below reproduces exactly that: duckdb via ``.df()``, no float rounding,
+Decimals stringified as-is.
 
-``--strict`` additionally emulates the DRIVER's canonicalization path,
-which round-1 showed differs from ours: the driver pulls the duckdb side
-through a pandas/arrow frame (DECIMAL -> float64, HUGEINT -> float64)
-while Spark rows keep ``decimal.Decimal`` objects, then compares string
-forms without float re-rounding. So a query whose final schema still
-contains DECIMAL (or whose oracle sums an INT into HUGEINT) hash-fails
-at the driver even when values are numerically identical ("1400362.00"
-vs "1400362.0"). Strict mode reproduces exactly that: duckdb via
-``.df()``, no 9-sig-digit rounding, Decimals stringified as-is. Every
-query must be strict-green before submission.
-
-Usage: python tools/check_correctness.py [--strict] [query_name ...]
+Callers: ``tests/test_oracle.py`` checks every declared query at sf0.01
+(``SPARK_GRAFT_ORACLE_DIR`` for another scale, ``-k`` for a subset),
+``tools/tz_sweep.py`` checks them under a non-UTC session, and
+``perfbench/querymix.py`` digests results in the strict form. Module-level
+imports stay stdlib-only: perfbench imports this module into the process
+it measures.
 """
 
 from __future__ import annotations
@@ -25,46 +27,15 @@ import datetime as dt
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_DIR", "/root/testdata/sf0.01")
-
-
-def canon(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return f"{v:.9g}"
-    if isinstance(v, dt.datetime):
-        return v.replace(tzinfo=None).isoformat()
-    if isinstance(v, dt.date):
-        return v.isoformat()
-    if v is None:
-        return "NULL"
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(canon(x) for x in v) + "]"
-    try:
-        import decimal
-
-        if isinstance(v, decimal.Decimal):
-            return f"{float(v):.9g}"
-    except ImportError:
-        pass
-    return str(v)
-
-
-def canonical_rows(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(tuple(canon(r[i]) for i in order) for r in rows)
 
 
 def canon_strict(v):
     """Driver-faithful stringification: no float rounding, Decimals kept
     verbatim. Mirrors a canonicalizer that str()s each cell after pulling
     the oracle frame through pandas (so DECIMAL/HUGEINT arrive as float64
-    on the oracle side only — the asymmetry this mode exists to catch)."""
+    on the oracle side only — the asymmetry this form exists to catch)."""
     import decimal
 
     try:
@@ -99,7 +70,7 @@ def canon_strict(v):
     if isinstance(v, (list, tuple, dict)):
         # The driver's canonicalizer (pandas lexsort over all columns)
         # raises ``TypeError: unhashable type: 'list'`` on container
-        # cells (round-3 ar2/g8 reds). Strict mode must reproduce that
+        # cells (round-3 ar2/g8 reds). The strict form must reproduce that
         # failure, not paper over it with a serialization the driver
         # doesn't have. Queries with container outputs get a terminal
         # to_json at the registry (queries/__init__._stable_output_types).
@@ -129,101 +100,42 @@ def oracle_rows_via_pandas(res):
     return cols, rows
 
 
-def main():
+def oracle_con(sf_dir: str):
+    """A duckdb connection with one view per test table in ``sf_dir``."""
     import duckdb
 
-    import __spark_entry__ as entrymod
-    from aristoteles_spark.session import get_spark
+    from aristoteles_spark.sources.parquet_source import TABLES
 
-    argv = sys.argv[1:]
-    strict = "--strict" in argv
-    if "--window" in argv:
-        # print which queries sit in the driver's first-N check window
-        # under the current CORRECTNESS_r* history (see
-        # queries/__init__.py:_history_order), then exit — a rotation
-        # sanity check for round planning; no Spark session needed.
-        import __spark_entry__ as em
-
-        names = list(em.queries())
-        n = 50
-        for i, name in enumerate(names):
-            mark = "IN-WINDOW " if i < n else "          "
-            print(f"{mark}{i + 1:3d}  {name}")
-        print(f"\n{len(names)} declared; first {n} = driver window")
-        return
-    only = set(a for a in argv if not a.startswith("--"))
-    spark = get_spark("check_correctness")
     con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]:
-        p = os.path.join(SF_DIR, f"{t}.parquet")
+    for t in TABLES:
+        p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-
-    queries = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    n_pass = n_fail = n_weak = 0
-    for name, fn in queries.items():
-        if only and name not in only:
-            continue
-        t0 = time.time()
-        try:
-            sdf = fn(spark, SF_DIR)
-            s_cols = sdf.columns
-            s_rows = [tuple(r) for r in sdf.collect()]
-        except Exception as e:
-            print(f"FAIL {name}: spark error: {e}")
-            n_fail += 1
-            continue
-        if name not in oracles:
-            print(f"WEAK {name}: rows={len(s_rows)} (no oracle declared)  [{time.time()-t0:.1f}s]")
-            n_weak += 1
-            continue
-        try:
-            res = con.execute(oracles[name])
-            if strict:
-                o_cols, o_rows = oracle_rows_via_pandas(res)
-            else:
-                o_cols = [d[0] for d in res.description]
-                o_rows = res.fetchall()
-        except Exception as e:
-            print(f"FAIL {name}: oracle error: {e}")
-            n_fail += 1
-            continue
-        problems = []
-        if sorted(s_cols) != sorted(o_cols):
-            problems.append(f"schema {sorted(s_cols)} vs {sorted(o_cols)}")
-        if len(s_rows) != len(o_rows):
-            problems.append(f"rowcount {len(s_rows)} vs {len(o_rows)}")
-        if not problems:
-            try:
-                if strict:
-                    sc = canonical_rows_strict(s_cols, s_rows)
-                    oc = canonical_rows_strict(o_cols, o_rows)
-                else:
-                    sc = canonical_rows(s_cols, s_rows)
-                    oc = canonical_rows(o_cols, o_rows)
-            except DriverUncanonicalizable as e:
-                problems.append(str(e))
-            else:
-                diffs = [(a, b) for a, b in zip(sc, oc) if a != b]
-                if diffs:
-                    problems.append(f"values: first diff {diffs[0]}")
-        if problems:
-            print(f"FAIL {name}: {'; '.join(problems)}  [{time.time()-t0:.1f}s]")
-            n_fail += 1
-        else:
-            # a 0-row match is vacuous — both engines agree on nothing.
-            # Flag it so testdata regeneration can't silently hollow out
-            # a query (its literals may no longer select anything).
-            empty = " (WARN: empty result — vacuous match)" if not s_rows else ""
-            print(f"PASS {name}: {len(s_rows)} rows{empty}  [{time.time()-t0:.1f}s]")
-            n_pass += 1
-    print(f"\n{n_pass} pass, {n_weak} weak (rows-only), {n_fail} fail")
-    return 1 if n_fail else 0
+    return con
 
 
-if __name__ == "__main__":
-    sys.exit(main())
+def mismatch(sdf, oracle_result) -> str | None:
+    """Why a Spark DataFrame differs from its duckdb oracle result in the
+    strict form, or None when they match.
+
+    A 0-row match counts as a mismatch: both engines agree on nothing, so
+    regenerated test data could hollow a query out (its literals may no
+    longer select anything) without any check noticing."""
+    s_cols = sdf.columns
+    s_rows = [tuple(r) for r in sdf.collect()]
+    o_cols, o_rows = oracle_rows_via_pandas(oracle_result)
+    if sorted(s_cols) != sorted(o_cols):
+        return f"columns {sorted(s_cols)} vs oracle {sorted(o_cols)}"
+    if len(s_rows) != len(o_rows):
+        return f"{len(s_rows)} rows vs oracle {len(o_rows)}"
+    if not s_rows:
+        return "0 rows on both sides: the match is vacuous"
+    try:
+        sc = canonical_rows_strict(s_cols, s_rows)
+        oc = canonical_rows_strict(o_cols, o_rows)
+    except DriverUncanonicalizable as e:
+        return str(e)
+    diffs = [(a, b) for a, b in zip(sc, oc) if a != b]
+    if diffs:
+        return f"values differ, first {diffs[0][0]} vs oracle {diffs[0][1]}"
+    return None

@@ -22,14 +22,12 @@ import tempfile
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SRC = os.environ.get("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.001")
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 
 def make_empty_fixture() -> str:
     import pyarrow.parquet as pq
+
+    from aristoteles_spark.sources.parquet_source import TABLES
 
     d = tempfile.mkdtemp(prefix="empty_sf_")
     for t in TABLES:

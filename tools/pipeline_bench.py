@@ -12,7 +12,8 @@ numbers (BASELINE.md), so the comparison target is structural: rows/s
 here vs a serial interpreter loop over the same rows.
 
 Each run's wall is split by stage from the ``aristoteles_stage_seconds``
-gauges of the Prometheus textfile the run writes into the work dir.
+gauges of the Prometheus textfile the run writes into the work dir. One
+untimed warm-up run goes first, so the timed runs see a warm session.
 
 Rewrites PIPELINE_BENCH.md. Usage: python tools/pipeline_bench.py [days]
 """
@@ -99,16 +100,20 @@ def main() -> None:
     total_rows = N_DAYS * N_STATIONS * SAMPLES
     last = dt.date(2020, 1, 1) + dt.timedelta(days=N_DAYS - 1)
 
-    walls, stages = [], []
-    for _ in range(REPEATS):
+    def once() -> tuple[float, dict[str, float]]:
         shutil.rmtree(conf.archive, ignore_errors=True)
         if os.path.exists(conf.state_path):
             os.remove(conf.state_path)
         t0 = time.perf_counter()
         res = run(spark, conf, stop=last)
-        walls.append(time.perf_counter() - t0)
+        wall = time.perf_counter() - t0
         assert (res.days_written, res.rows_written) == (N_DAYS, total_rows), res
-        stages.append(stage_seconds(conf.netfc_path))
+        return wall, stage_seconds(conf.netfc_path)
+
+    # untimed: the first run pays the session's cold costs (JIT, codegen,
+    # first Python worker), which the median of three would half-absorb
+    once()
+    walls, stages = zip(*(once() for _ in range(REPEATS)))
     wall = statistics.median(walls)
     split = {st: statistics.median(s[st] for s in stages) for st in stages[0]}
 
@@ -128,7 +133,8 @@ def main() -> None:
         "SQLite in -> converted -> partitioned parquet out, "
         f"`{spark.sparkContext.master}` on one host: {host()}.\n\n"
         f"`run` catches up the whole span from an empty archive, median of "
-        f"{REPEATS} runs (walls {', '.join(f'{w:.1f}' for w in walls)} s):\n\n"
+        f"{REPEATS} runs after one untimed warm-up run "
+        f"(walls {', '.join(f'{w:.1f}' for w in walls)} s):\n\n"
         f"{table}\n\n"
         "The stage columns are the median per stage of the runs'\n"
         "`aristoteles_stage_seconds{stage}` gauges (`plans/pipeline.py`):\n"

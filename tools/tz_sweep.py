@@ -1,108 +1,60 @@
 """Session-robustness sweep: every declared query vs its duckdb oracle
 under a DIFFERENT session configuration than the engine default —
-non-UTC session timezone and a different shuffle partition count.
+non-UTC session and process timezone and 200 shuffle partitions.
 
 Catches results that silently depend on the session: TIMESTAMP_NTZ
 columns coerced through the session zone by date_trunc/sequence, zoned
 values rendered in the process zone by collect(), partition-count
 dependent sampling, etc. The driver's grading session is not ours, so
-every query must be invariant to these knobs.
+every query must be invariant to these knobs. The session is otherwise
+``get_spark``'s (cores from the host) and the comparison is the strict
+one of ``tests/test_oracle.py`` (``check_correctness.mismatch``).
 
 Usage: python tools/tz_sweep.py [query_name ...]
 """
 
 from __future__ import annotations
 
-import datetime as dt
-import math
 import os
 import sys
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_DIR", "/root/testdata/sf0.01")
 TZ = os.environ.get("SPARK_GRAFT_SWEEP_TZ", "America/New_York")
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-
-def canon(v):
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else f"{v:.9g}"
-    if isinstance(v, dt.datetime):
-        return v.replace(tzinfo=None).isoformat()
-    if isinstance(v, dt.date):
-        return v.isoformat()
-    if v is None:
-        return "NULL"
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(canon(x) for x in v) + "]"
-    import decimal
-
-    if isinstance(v, decimal.Decimal):
-        return f"{float(v):.9g}"
-    return str(v)
-
 
 def main():
-    import time as _time
-
-    import duckdb
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entrymod
+    from aristoteles_spark.session import get_spark
+    from check_correctness import mismatch, oracle_con
 
     # shift the PROCESS timezone too: collect() renders zoned timestamps
     # via the driver process zone, not the session zone
     os.environ["TZ"] = TZ
-    _time.tzset()
+    time.tzset()
 
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "200")
-        .config("spark.sql.session.timeZone", TZ)
-        .config("spark.driver.memory", "12g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = get_spark(
+        "tz_sweep",
+        extra_conf={
+            "spark.sql.shuffle.partitions": "200",
+            "spark.sql.session.timeZone": TZ,
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for t in TABLES:
-        p = os.path.join(SF_DIR, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-
+    con = oracle_con(SF_DIR)
     only = set(sys.argv[1:])
-    qs, orc = entrymod.queries(), entrymod.oracle_sql()
+    oracles = entrymod.oracle_sql()
     bad = 0
-    for name, fn in qs.items():
+    for name, fn in entrymod.queries().items():
         if only and name not in only:
             continue
-        if name not in orc:
-            continue
         try:
-            sdf = fn(spark, SF_DIR)
-            cols = sdf.columns
-            order = sorted(range(len(cols)), key=lambda i: cols[i])
-            srows = sorted(
-                tuple(canon(r[i]) for i in order)
-                for r in [tuple(x) for x in sdf.collect()]
-            )
-            res = con.execute(orc[name])
-            ocols = [d[0] for d in res.description]
-            oorder = sorted(range(len(ocols)), key=lambda i: ocols[i])
-            orows = sorted(tuple(canon(r[i]) for i in oorder) for r in res.fetchall())
-            if srows == orows and sorted(cols) == sorted(ocols):
-                print(f"OK {name}")
-            else:
-                bad += 1
-                print(f"MISMATCH {name}")
-        except Exception as ex:  # noqa: BLE001
-            bad += 1
-            print(f"ERROR {name}: {str(ex)[:150]}")
+            why = mismatch(fn(spark, SF_DIR), con.execute(oracles[name]))
+        except Exception as ex:  # noqa: BLE001 — a sweep reports, never hides
+            why = f"error: {str(ex)[:150]}"
+        print(f"OK {name}" if why is None else f"MISMATCH {name}: {why}", flush=True)
+        bad += why is not None
     print(f"\nDONE bad={bad} (tz={TZ}, shuffle.partitions=200)")
     return 1 if bad else 0
 
