@@ -214,9 +214,9 @@ def q_multires_rollup(spark, sf_dir):
     aggregates of the events stream in ONE scan via GROUPING SETS (the
     continuous-aggregate pattern; each finer level could also fold into
     the coarser one incrementally)."""
-    from aristoteles_spark.sources.parquet_source import register_views
+    from aristoteles_spark.plans.sql import register_views
 
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, ["events"])
     # NTZ-safe truncation in SQL: date_trunc would coerce the NTZ column
     # through the session timezone (functions/time.py:ntz_trunc notes)
     us = "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)"

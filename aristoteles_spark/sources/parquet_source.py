@@ -20,27 +20,37 @@ TABLES = [
 ]
 
 
-def _ns_timestamp_cols(path: str) -> list[str]:
-    """Column names stored as TIMESTAMP(NANOS) — Spark can't read those
-    natively; we read them as long and convert (truncate) to micros."""
-    import pyarrow.parquet as pq
-
-    try:
-        schema = pq.read_schema(path)
-    except Exception:
-        return []
-    return [f.name for f in schema if str(f.type) == "timestamp[ns]"]
+# file identity -> (timestamp[ns] column names, schema Spark inferred)
+_SCHEMAS: dict[tuple, tuple] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one test table; its rows come from the file on every call.
+
+    Spark's parquet schema inference starts a one-task job that reads the
+    footer, so each file's inferred schema and timestamp[ns] columns are
+    remembered for the life of the process, keyed on the file's identity:
+    absolute path, inode, mtime in ns and size. Later loads read with that
+    schema and start no job; a rewritten file is inferred again."""
+    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    ns_cols = _ns_timestamp_cols(path)
-    if not ns_cols:
-        return spark.read.parquet(path)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    path = os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
+    st = os.stat(path)
+    key = (path, st.st_ino, st.st_mtime_ns, st.st_size)
+    ns_cols, schema = _SCHEMAS.get(key, (None, None))
+    if ns_cols is None:  # TIMESTAMP(NANOS): read as long, truncated to micros below
+        try:
+            ns_cols = [f.name for f in pq.read_schema(path) if str(f.type) == "timestamp[ns]"]
+        except (OSError, ValueError):  # a dataset directory, or not parquet
+            ns_cols = []
+    if ns_cols:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    if schema is None:
+        df = spark.read.parquet(path)
+        _SCHEMAS[key] = (ns_cols, df.schema)
+    else:
+        df = spark.read.schema(schema).parquet(path)
     for c in ns_cols:
         # integer div: double division would lose precision at ns-epoch scale
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
@@ -63,8 +73,3 @@ def fan_out(df: DataFrame, parts: int | None = None) -> DataFrame:
     n = parts or df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(n)
 
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every test table as a temp view for spark.sql use."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
