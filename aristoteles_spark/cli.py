@@ -17,13 +17,9 @@ import configparser
 import datetime as dt
 import sys
 
-from aristoteles_spark.plans import days as D
 from aristoteles_spark.plans import state as S
-from aristoteles_spark.plans.pipeline import PipelineConfig, run
+from aristoteles_spark.plans.pipeline import PipelineConfig, earliest_day, run
 from aristoteles_spark.session import get_spark
-from aristoteles_spark.sources.sqlite_source import min_datetime
-
-_GLOBAL_KEYS = {"state_path", "instrument", "archive", "netfc_path"}
 
 
 def load_conf(path: str) -> PipelineConfig:
@@ -46,7 +42,6 @@ def load_conf(path: str) -> PipelineConfig:
         archive=g["archive"],
         stations=stations,
         netfc_path=g.get("netfc_path"),
-        output_format=g.get("output_format", "parquet"),
     )
 
 
@@ -57,14 +52,9 @@ def reset_state(conf: PipelineConfig, day_str: str | None, force: bool) -> int:
     if S.read_state(conf.state_path) is not None and not force:
         print("state file exists; use --force to overwrite", file=sys.stderr)
         return 1
-    mins = [
-        m
-        for m in (min_datetime(sc["db_path"]) for sc in conf.stations.values())
-        if m is not None
-    ]
-    if not mins:
+    earliest = earliest_day(conf)
+    if earliest is None:
         return 1
-    earliest = D.epoch_to_day(min(mins))
     requested = S.validate_day(S.parse_day(day_str)) if day_str else earliest
     chosen = max(requested, earliest)
     # write_state stores day+1; reference stores the chosen day itself as

@@ -5,18 +5,15 @@ The reference converts per-row, per-cell in a scalar Python double loop
 one ``F.when`` expression — vectorized by Tungsten whole-stage codegen, no
 UDF, no shuffle.
 
-Two fidelity modes:
+The conversion reproduces the reference byte-for-byte, including its
+quirks (reference aristoteles.py:418-419):
 
-* ``strict=True`` (default) reproduces the reference byte-for-byte,
-  including its quirks (reference aristoteles.py:418-419):
-    - a cell equal to exactly ``0.0`` is NOT converted ("if not data[i,j]:
-      continue"), so 0 degF stays 0 rather than becoming -17.78 degC;
-    - NaN passes the truthiness check (``bool(nan) is True``) and converts
-      to NaN — an identity in effect;
-    - the whole row converts only when ``usUnits`` is nonzero
-      (aristoteles.py:415-416).
-* ``strict=False`` is the corrected mode: converts every non-null cell of a
-  US-units row, including zeros.
+* a cell equal to exactly ``0.0`` is NOT converted ("if not data[i,j]:
+  continue"), so 0 degF stays 0 rather than becoming -17.78 degC;
+* NaN passes the truthiness check (``bool(nan) is True``) and converts
+  to NaN — an identity in effect;
+* the whole row converts only when ``usUnits`` is nonzero
+  (aristoteles.py:415-416).
 
 Conversion factors (reference aristoteles.py:421-436):
     pressure     inHg -> hPa   : x * 33.863886
@@ -50,40 +47,33 @@ _CONVERTERS = {
 }
 
 
-def convert_measure(
-    col: Column | str, type_tag: str, us_units: Column | str = "usUnits", strict: bool = True
-) -> Column:
-    """One measure column converted to metric, gated on the per-row flag."""
-    c = F.col(col) if isinstance(col, str) else col
-    us = F.col(us_units) if isinstance(us_units, str) else us_units
+def convert_measure(name: str, type_tag: str) -> Column:
+    """One measure column converted to metric, gated on the row's
+    ``usUnits`` flag."""
+    c = F.col(name)
     conv = _CONVERTERS[type_tag]
     if conv is None:
         return c
-    if strict:
-        # reference skips falsy cells (0.0); NULL stays NULL (sink maps to NaN)
-        return F.when((us != 0) & c.isNotNull() & (c != 0.0), conv(c)).otherwise(c)
-    return F.when((us != 0) & c.isNotNull(), conv(c)).otherwise(c)
+    # reference skips falsy cells (0.0); NULL stays NULL (sink maps to NaN)
+    return F.when((F.col("usUnits") != 0) & c.isNotNull() & (c != 0.0), conv(c)).otherwise(c)
 
 
 @functools.lru_cache(maxsize=None)
-def conversion_exprs(strict: bool = True, us_units: str = "usUnits") -> tuple[Column, ...]:
+def conversion_exprs() -> tuple[Column, ...]:
     """All 16 measure conversion expressions, aliased to their own names.
 
-    Built once per process and argument pair, as a tuple so the shared
-    value cannot be mutated. The expressions are unresolved, bound to no
-    session, so every later frame (a later session in the same process
-    too) reuses them instead of paying their py4j round trips again.
+    Built once per process, as a tuple so the shared value cannot be
+    mutated. The expressions are unresolved, bound to no session, so every
+    later frame (a later session in the same process too) reuses them
+    instead of paying their py4j round trips again.
     """
-    return tuple(
-        convert_measure(m, tag, us_units=us_units, strict=strict).alias(m)
-        for m, tag in MEASURE_TYPES.items()
-    )
+    return tuple(convert_measure(m, tag).alias(m) for m, tag in MEASURE_TYPES.items())
 
 
-def convert_dataframe(df, strict: bool = True):
+def convert_dataframe(df):
     """Apply metric conversion to an archive-shaped DataFrame.
 
     Keeps every non-measure column as-is; one narrow projection, no shuffle.
     """
     passthrough = [c for c in df.columns if c not in MEASURE_TYPES]
-    return df.select(*passthrough, *conversion_exprs(strict=strict))
+    return df.select(*passthrough, *conversion_exprs())

@@ -1,5 +1,4 @@
-"""Stage barrier that plan checks can switch off (the ``_finalize``
-pattern, shared).
+"""Stage barrier that plan checks can switch off.
 
 ``localCheckpoint`` is the production stage seam — materialize a compact
 intermediate ONCE instead of re-running its subtree per consumer — but
@@ -50,7 +49,15 @@ def audit_barrier(
 ) -> DataFrame:
     """``df.localCheckpoint(eager)`` then unpersist ``caches`` — unless
     inside ``no_barriers()``, where ``df`` is returned unchanged and
-    ``caches`` are released when the block exits."""
+    ``caches`` are released when the block exits.
+
+    The pair/edge operators end with it: the eager checkpoint writes the
+    compact result at the seam a production pipeline writes it anyway,
+    and the corpus-sized intermediates that fed it are released at once.
+    Without the explicit release they sit in the block manager until a
+    JVM GC notices the dropped references; across a couple hundred
+    queries sharing one session that accumulation pressures the shared
+    scan cache (measured as the round-3 graph-family drift)."""
     if _skipped is not None:
         _skipped.extend(caches)
         return df

@@ -31,7 +31,7 @@ from aristoteles_spark.functions.text import (
     minhash_signature,
     simhash32,
 )
-from aristoteles_spark.operators.barrier import barrier_disabled
+from aristoteles_spark.operators.barrier import audit_barrier, barrier_disabled
 
 
 # membership tables are broadcast only when MEASURED small (the count is
@@ -39,27 +39,6 @@ from aristoteles_spark.operators.barrier import barrier_disabled
 # frames, and an unconditional hint would ship the full corpus's membership
 # to every executor at 100 TB
 _BROADCAST_MAX_ROWS = 2_000_000
-
-
-def _finalize(result: DataFrame, *cached: DataFrame) -> DataFrame:
-    """Materialize the compact result (eager localCheckpoint) and release
-    the corpus-sized intermediate caches that fed it.
-
-    Without the explicit release the persisted intermediates sit in the
-    block manager until a JVM GC notices the dropped references — across
-    a couple hundred queries sharing one session that accumulation
-    pressures the shared scan cache (measured as the round-3 graph-family
-    drift). The checkpoint is the same stage barrier a production
-    pipeline places at this seam anyway: write the pair/edge table
-    between stages, then drop the inputs.
-
-    ``no_barriers()`` (tests/test_plans.py) skips the barrier so
-    explain() still shows the strategy plan — the exact plan
-    the checkpoint materialization runs — instead of a checkpoint scan
-    (shared helper: operators/barrier.py)."""
-    from aristoteles_spark.operators.barrier import audit_barrier
-
-    return audit_barrier(result, *cached)
 
 
 def _maybe_broadcast(frame: DataFrame, n_rows: int) -> DataFrame:
@@ -208,7 +187,7 @@ def ngram_jaccard_pairs(
     da = docs.select(F.col("doc").alias("doc_a"), F.col("toks").alias("toks_a"), F.col("sz").alias("sz_a"))
     db = docs.select(F.col("doc").alias("doc_b"), F.col("toks").alias("toks_b"), F.col("sz").alias("sz_b"))
     inter = F.size(F.array_intersect("toks_a", "toks_b"))
-    return _finalize(
+    return audit_barrier(
         cand.join(da, "doc_a")
         .join(db, "doc_b")
         .withColumn(
@@ -371,7 +350,7 @@ def _jaccard_pairs_bitset(
             F.col("i") / (F.col("sz_a") + F.col("sz_b") - F.col("i")).cast("double"),
         )
     )
-    dict_bc = None  # broadcast dictionary, released after the _finalize barrier
+    dict_bc = None  # broadcast dictionary, released after the final audit_barrier
     M = uniq.count()
     if M <= allpairs_set_cap:
         # distinct-set all-pairs: popcount(AND) with the cheap size-ratio
@@ -640,7 +619,7 @@ def _jaccard_pairs_bitset(
             F.lit(1.0).alias("jaccard"),
         )
     )
-    out = _finalize(cross.unionByName(intra), members, uniq)
+    out = audit_barrier(cross.unionByName(intra), members, uniq)
     if dict_bc is not None and not barrier_disabled():
         # the eager localCheckpoint above materialized every consumer of
         # the verify kernel, so the dictionary broadcast (up to the
@@ -909,7 +888,7 @@ def minhash_lsh_pairs(
             F.lit(1.0).alias("est_sim"),
         )
     )
-    return _finalize(cross.unionByName(intra), members, uniq, sig_pairs)
+    return audit_barrier(cross.unionByName(intra), members, uniq, sig_pairs)
 
 
 def minhash_cluster_edges(
@@ -965,7 +944,7 @@ def minhash_cluster_edges(
         .join(rb, "sig_b")
         .select(F.col("rep_a").alias("doc_a"), F.col("rep_b").alias("doc_b"))
     )
-    return _finalize(star.unionByName(bridge), members, uniq, reps, sig_pairs)
+    return audit_barrier(star.unionByName(bridge), members, uniq, reps, sig_pairs)
 
 
 def simhash_sketches(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -1004,7 +983,7 @@ def simhash_pairs(
     # are per-row pure, so a shared table is bit-identical to re-hashing.
     # The caller-supplied frame gets a DETACHED persist via select('*')
     # (ADVICE r9): persisting/unpersisting the shared table object itself
-    # would silently evict a caller's own cache through _finalize below.
+    # would silently evict a caller's own cache through audit_barrier below.
     members = (
         sketches.select("*")
         if sketches is not None
@@ -1073,7 +1052,7 @@ def simhash_pairs(
             F.lit(0).cast("int").alias("hamming"),
         )
     )
-    return _finalize(cross.unionByName(intra), members, uniq)
+    return audit_barrier(cross.unionByName(intra), members, uniq)
 
 
 def minhash_banded(

@@ -151,6 +151,12 @@ def connected_components(
         .filter(F.col("c_src") != F.col("c_dst"))
         .select(F.col("c_src").alias("src"), F.col("c_dst").alias("dst"))
         .distinct()
+        # lazy: the bounded collect below computes the contraction, and
+        # the checkpoint keeps every partition of it for the fallback
+        # loop's many scans instead of computing it a second time. A
+        # collect that returns the whole contraction has computed every
+        # partition, so the union-find path runs no extra job.
+        .localCheckpoint(eager=False)
     )
 
     # the contracted graph is bounded by #partial-clusters, not #edges —
@@ -200,7 +206,6 @@ def connected_components(
         )
         roots = F.broadcast(map_df)
     else:
-        contracted = contracted.localCheckpoint()  # loop input, many scans
         cnodes = contracted.select(F.col("src").alias("node")).unionByName(
             contracted.select(F.col("dst").alias("node"))
         ).distinct()

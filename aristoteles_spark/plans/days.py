@@ -54,11 +54,12 @@ def acq_name(day: dt.date, instrument: str) -> str:
     return f"{m.strftime('%Y%m%d')}T000000Z_{instrument}_weather"
 
 
-def gate_complete(counts: dict[str, int], expected: int = SAMPLES_PER_DAY) -> list[str]:
-    """Completeness gate: stations whose last-day sample count != expected.
+def gate_complete(counts: dict[str, int]) -> list[str]:
+    """Completeness gate: stations whose last-day sample count is not
+    ``SAMPLES_PER_DAY`` (288, one every five minutes).
 
     The reference aborts the whole run if ANY station is incomplete
     (aristoteles.py:296-327) because wview backfills after downtime; an
     empty return means the gate passes.
     """
-    return [s for s, n in counts.items() if n != expected]
+    return [s for s, n in counts.items() if n != SAMPLES_PER_DAY]

@@ -11,9 +11,10 @@ reads the watermark, gates on the target day's completeness, then:
          partitioned by date (one file per day), in
          min(pending days, defaultParallelism) tasks: a one-day run is
          one task with no shuffle, a catch-up hashes days onto its tasks
-      -> publish on the driver, day by day in order: lock, swap the
-         staged partition in (sinks/compact.swap_partition), sidecar,
-         unlock, advance the watermark
+      -> publish on the driver, day by day in order: count the day's rows
+         from its parquet footers, lock, swap the staged partition in
+         (sinks/compact.swap_partition), sidecar, unlock, advance the
+         watermark
 
 Each run exports its wall seconds per stage (``probe``: the min and gate
 SQLite probes, ``read``, ``write``: convert plus the staging job,
@@ -39,18 +40,18 @@ import functools
 import os
 import shutil
 import time
-from collections import Counter
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aristoteles_spark.functions.units import convert_dataframe
 from aristoteles_spark.obs.prom import PromBuffer
 from aristoteles_spark.plans import days as D
 from aristoteles_spark.plans import state as S
-from aristoteles_spark.schema import ARCHIVE_COLUMNS, MEASURE_TYPES, SAMPLES_PER_DAY
+from aristoteles_spark.schema import ARCHIVE_COLUMNS, MEASURE_TYPES
 from aristoteles_spark.sinks.compact import recover_compaction, staging_dir, swap_partition
 from aristoteles_spark.sinks.daily_parquet import lock_path, write_sidecar
 from aristoteles_spark.sources.sqlite_source import (
@@ -69,9 +70,6 @@ class PipelineConfig:
     archive: str
     stations: dict[str, dict]  # name -> {db_path, longitude?, latitude?, description?}
     netfc_path: str | None = None
-    strict_units: bool = True
-    expected_samples: int = SAMPLES_PER_DAY
-    output_format: str = "parquet"  # parquet | orc
 
 
 @dataclass
@@ -108,14 +106,11 @@ def run(
         recover_compaction(conf.archive)  # leftovers of an interrupted run
         db_paths = {n: sc["db_path"] for n, sc in conf.stations.items()}
 
-        # earliest data across stations (reference SQL #1 + driver fold,
-        # aristoteles.py:240-254)
         with _timed(stages, "probe"):
-            mins = [m for m in (min_datetime(p) for p in db_paths.values()) if m is not None]
-        if not mins:
+            start_day = earliest_day(conf)
+        if start_day is None:
             result.status = 1
             return result
-        start_day = D.epoch_to_day(min(mins))
 
         first_day = S.read_state(conf.state_path) or start_day
         today = today or dt.datetime.now(dt.timezone.utc).date()
@@ -133,7 +128,7 @@ def run(
             counts = {n: ranged_count(p, lo, hi) for n, p in db_paths.items()}
         for n, c in counts.items():
             prom.add("samples_yesterday", c, {"station": n})
-        incomplete = D.gate_complete(counts, conf.expected_samples)
+        incomplete = D.gate_complete(counts)
         if incomplete and not force:
             result.incomplete_stations = incomplete
             return result  # status 0: defer the whole backlog
@@ -143,18 +138,18 @@ def run(
             with _timed(stages, "read"):  # the pending span: first_day through target
                 raw = read_stations(spark, db_paths, D.day_bounds(first_day)[0], hi)
             with _timed(stages, "write"):
-                rows = _stage_days(spark, conf, raw, first_day, target, staging)
+                _stage_days(spark, raw, first_day, target, staging)
             with _timed(stages, "publish"):
                 for day in D.span_range(first_day, target):
-                    published = _publish_day(conf, staging, day)
+                    rows = _publish_day(conf, staging, day)
                     # crash-safe: advance the watermark only after the day's commit
                     S.write_state(conf.state_path, day)
                     # a day counts for the run that advanced the watermark past it
-                    if published:
-                        result.days_written += 1
-                        result.rows_written += rows[day]
-                    else:  # skip-day path (reference aristoteles.py:348-370)
+                    if rows is None:  # skip-day path (reference aristoteles.py:348-370)
                         result.skipped_days.append(day)
+                    else:
+                        result.days_written += 1
+                        result.rows_written += rows
         finally:
             shutil.rmtree(staging, ignore_errors=True)
             prom.add("days_written", result.days_written)
@@ -167,6 +162,15 @@ def run(
         for stage, seconds in stages.items():
             prom.add("stage_seconds", seconds, {"stage": stage})
         prom.flush(conf.netfc_path, result.status)
+
+
+def earliest_day(conf: PipelineConfig) -> dt.date | None:
+    """UTC day of the earliest sample across stations (reference SQL #1
+    and its driver fold, aristoteles.py:240-254); None when no station
+    has a sample."""
+    mins = [min_datetime(sc["db_path"]) for sc in conf.stations.values()]
+    mins = [m for m in mins if m is not None]
+    return D.epoch_to_day(min(mins)) if mins else None
 
 
 @functools.lru_cache(maxsize=None)
@@ -189,18 +193,12 @@ def _sink_columns() -> tuple[Column, ...]:
 
 
 def _stage_days(
-    spark: SparkSession,
-    conf: PipelineConfig,
-    raw: DataFrame,
-    first: dt.date,
-    last: dt.date,
-    staging: str,
-) -> dict[dt.date, int]:
+    spark: SparkSession, raw: DataFrame, first: dt.date, last: dt.date, staging: str
+) -> None:
     """Convert ``raw`` (every station over ``[first, last]``) and write it
     in ONE job to ``staging``, partitioned by ``date`` with one file per
-    day; a day without rows gets no partition. Returns rows per day,
-    counted by an Observation on the write job itself (no second pass
-    over the data).
+    day; a day without rows gets no partition. The write counts nothing:
+    ``_publish_day`` reads each day's row count from its parquet footers.
 
     The write runs ``min(days in the span, defaultParallelism)`` tasks.
     Each day is written as one file, so one task always writes a whole
@@ -209,27 +207,24 @@ def _stage_days(
     job with a single task. More are an explicit ``repartition(n,
     "date")``, which AQE does not coalesce, so a long catch-up keeps
     every core."""
-    days = list(D.span_range(first, last))
-    tasks = min(len(days), spark.sparkContext.defaultParallelism)
-    out = convert_dataframe(raw, strict=conf.strict_units).select(*_sink_columns())
+    tasks = min((last - first).days + 1, spark.sparkContext.defaultParallelism)
+    out = convert_dataframe(raw).select(*_sink_columns())
     out = out.coalesce(1) if tasks == 1 else out.repartition(tasks, "date")
     out = out.sortWithinPartitions("date", "station", "dateTime")
-    # one day offset per row: linear in rows, where one count per day
-    # would evaluate every day's predicate on every row
-    obs = Observation("staged_rows")
-    observed = out.observe(obs, F.collect_list(F.datediff("date", F.lit(first))).alias("day"))
-    observed.write.partitionBy("date").format(conf.output_format).save(staging)
-    per_day = Counter(obs.get["day"])
-    return {d: per_day[i] for i, d in enumerate(days)}
+    out.write.partitionBy("date").parquet(staging)
 
 
-def _publish_day(conf: PipelineConfig, staging: str, day: dt.date) -> bool:
+def _publish_day(conf: PipelineConfig, staging: str, day: dt.date) -> int | None:
     """Swap one staged day into the archive under the reference's lock
-    protocol, then refresh its acquisition's sidecar. False when the day
-    has no staged partition (no rows: a skip day)."""
+    protocol, then refresh its acquisition's sidecar. Returns the day's
+    row count, summed from the footers of the parquet files it publishes
+    (no Spark job); None when the day has no staged partition (no rows:
+    a skip day)."""
     staged = os.path.join(staging, f"date={day.isoformat()}")
     if not os.path.isdir(staged):
-        return False
+        return None
+    files = [f for f in os.listdir(staged) if not f.startswith((".", "_"))]  # hidden: .crc
+    rows = sum(pq.read_metadata(os.path.join(staged, f)).num_rows for f in files)
     acq = D.acq_name(day, conf.instrument)
     acq_dir = os.path.join(conf.archive, f"acq={acq}")
     os.makedirs(acq_dir, exist_ok=True)
@@ -238,4 +233,4 @@ def _publish_day(conf: PipelineConfig, staging: str, day: dt.date) -> bool:
     swap_partition(staged, os.path.join(acq_dir, f"date={day.isoformat()}"))
     write_sidecar(conf.archive, acq, conf.instrument, conf.stations)
     os.unlink(lock)
-    return True
+    return rows

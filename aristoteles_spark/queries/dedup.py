@@ -87,11 +87,8 @@ def q_incremental_neardup(spark, sf_dir):
     novelty flag a filter stage would gate on. The production dedup
     shape — daily batches never re-pair the historical corpus."""
     from aristoteles_spark.functions.text import h32
-    from aristoteles_spark.operators.dedup import (
-        _finalize,
-        banded_index_grouped,
-        minhash_probe_census,
-    )
+    from aristoteles_spark.operators.barrier import audit_barrier
+    from aristoteles_spark.operators.dedup import banded_index_grouped, minhash_probe_census
 
     d = fan_out(load_table(spark, sf_dir, "documents"))
     is_batch = h32(F.col("doc_id").cast("string")) % NDSPLIT_MOD == 0
@@ -117,7 +114,7 @@ def q_incremental_neardup(spark, sf_dir):
     out = minhash_probe_census(
         idxg, sb, NUM_HASHES, BANDS, threshold=0.5
     ).orderBy("batch_doc")
-    return _finalize(out, sb)
+    return audit_barrier(out, sb)
 
 
 SPAN_W = 8  # non-overlapping block width (tokens)

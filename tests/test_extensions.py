@@ -709,17 +709,27 @@ class TestUnionFindVsDistributed:
         d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
         edges = minhash_cluster_edges(d, num_hashes=16, bands=4, threshold=0.5)
         nodes = d.select(F.col("doc_id").alias("doc"))
-        driver = {
-            (r.node, r.cluster)
-            for r in connected_components(nodes, edges).collect()
-        }
-        distributed = {
-            (r.node, r.cluster)
-            for r in connected_components(
-                nodes, edges, max_driver_edges=0
-            ).collect()
-        }
+        sc = spark.sparkContext
+
+        def build(group, **kw):
+            """connected_components' eager work, and the jobs it ran."""
+            sc.setJobGroup(group, group)
+            try:
+                out = connected_components(nodes, edges, **kw)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+        uf, uf_jobs = build("cc_union_find")
+        fallback, fallback_jobs = build("cc_fallback", max_driver_edges=0)
+        driver = {(r.node, r.cluster) for r in uf.collect()}
+        distributed = {(r.node, r.cluster) for r in fallback.collect()}
         assert driver == distributed and len(driver) > 0
+        # measured on 2 and 4 cores: union-find 10-11 jobs, the fallback
+        # 40-41 (its loop included); computing the contraction a second
+        # time for the fallback's checkpoint cost 4-5 more (44-46)
+        assert uf_jobs <= 11, uf_jobs
+        assert fallback_jobs <= 42, fallback_jobs
 
 
 class TestExactSubstringDedup:

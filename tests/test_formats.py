@@ -1,9 +1,8 @@
-"""Format round-trips: CSV/JSONL sources and the ORC daily sink."""
+"""Format round-trips: file sources, the SQL surface, the HDF5 export,
+compaction and the IO-format queries."""
 
 from __future__ import annotations
 
-import datetime as dt
-import glob
 import os
 import tempfile
 
@@ -43,28 +42,6 @@ class TestFileSources:
         rows = back.collect()
         assert len(rows) == 2  # PERMISSIVE: malformed row nulled, not fatal
         assert {r.n_nationkey for r in rows} == {1, None}
-
-
-class TestOrcSink:
-    def test_write_day_orc(self, spark, tmp_path, station_db):
-        from aristoteles_spark.plans.pipeline import PipelineConfig, run
-        from tests.conftest import day_rows
-
-        day = dt.date(2020, 6, 1)
-        conf = PipelineConfig(
-            state_path=str(tmp_path / "state"),
-            instrument="wx",
-            archive=str(tmp_path / "archive"),
-            stations={"st": {"db_path": station_db("st", day_rows(day, n=4))}},
-            output_format="orc",
-        )
-        res = run(spark, conf, stop=day, force=True)
-        assert res.days_written == 1 and res.rows_written == 4
-        files = glob.glob(f"{conf.archive}/acq=*/date=*/*.orc")
-        assert files, os.listdir(conf.archive)
-        back = spark.read.orc(conf.archive)
-        assert back.count() == 4
-        assert back.filter(F.col("outTemp").isNotNull()).count() == 4
 
 
 class TestSqlSurface:

@@ -4,18 +4,19 @@ Each scenario builds synthetic wview SQLite fixtures, runs the incremental
 pipeline, and checks output parquet + sidecars + state + idempotence.
 """
 
-import dataclasses
 import datetime as dt
 import json
 import math
 import os
 import re
+import sqlite3
 
 import pytest
 
 from aristoteles_spark.plans import state as S
 from aristoteles_spark.plans.days import day_bounds
 from aristoteles_spark.plans.pipeline import PipelineConfig, run
+from aristoteles_spark.sources.sqlite_source import write_archive_sqlite
 from tests.conftest import day_rows
 
 DAY1 = dt.date(2020, 6, 1)
@@ -336,13 +337,18 @@ def test_crash_between_swap_renames_is_repaired(spark, tmp_path, station_db, mon
     # a killed run (no `finally`) also leaves its staging directory behind
     os.makedirs(os.path.join(tmp_path, "swap", ".archive.compact-killed", "date=2020-06-03"))
 
-    # the next run repairs both before its gate, even when the gate defers;
-    # the day's lock stays until the day is published again
-    deferred = run(spark, dataclasses.replace(conf, expected_samples=1), today=DAY4)
-    assert deferred.incomplete_stations and deferred.days_written == 0
+    # the next run repairs both before its gate, even when the gate defers
+    # (one target-day sample missing); the day's lock stays until the day
+    # is published again
+    s1_db, last_sample = conf.stations["s1"]["db_path"], day_rows(DAY3)[-1]
+    with sqlite3.connect(s1_db) as db:
+        db.execute("DELETE FROM archive WHERE dateTime = ?", (last_sample[0],))
+    deferred = run(spark, conf, today=DAY4)
+    assert deferred.incomplete_stations == ["s1"] and deferred.days_written == 0
     assert _outcome(spark, conf)[0] == want_rows
     assert [p for p in _leftovers(tmp_path) if not p.endswith(".lock")] == []
 
+    write_archive_sqlite(s1_db, [last_sample])
     run(spark, conf, today=DAY4)
     rows, state, _ = _outcome(spark, conf)
     assert rows == want_rows and state == want_state

@@ -60,15 +60,9 @@ def test_metric_rows_untouched(spark):
 
 
 def test_zero_skip_quirk_strict(spark):
-    """0 degF must STAY 0 in strict mode (reference's falsy-cell skip)."""
+    """0 degF must STAY 0 (reference's falsy-cell skip)."""
     df = _frame(spark, [_row(usUnits=1, outTemp=0.0)])
     assert df.select(convert_measure("outTemp", "temperature")).first()[0] == 0.0
-
-
-def test_zero_converts_in_corrected_mode(spark):
-    df = _frame(spark, [_row(usUnits=1, outTemp=0.0)])
-    out = df.select(convert_measure("outTemp", "temperature", strict=False)).first()[0]
-    assert out == pytest.approx(-160.0 / 9.0, abs=1e-9)
 
 
 def test_null_passes_through(spark):

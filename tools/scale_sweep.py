@@ -309,20 +309,9 @@ def generate(force: bool = False) -> str:
 
 
 def _explain(df) -> str:
-    try:
-        jqe = df._jdf.queryExecution()
-        mode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-        return jqe.explainString(mode)
-    except Exception:
-        import contextlib
-        import io
-
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        return buf.getvalue()
+    """``df.explain("formatted")`` as a string."""
+    mode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    return df._jdf.queryExecution().explainString(mode)
 
 
 def _plan_counts(fn, spark, sf_dir: str) -> tuple[int, int, int]:
